@@ -212,7 +212,7 @@ object Core {
   }
 
   /** RDD ids whose blocks must survive [[releaseTransientBlocks]] — the
-    * session memos ([[graft.queries.Queries.memoRel]] relations, shared by
+    * session memos ([[graft.queries.memoRel]] relations, shared by
     * many queries). Keyed on the SparkContext instance (weakly, so a
     * stopped context's id set is collectable); everything NOT registered
     * here is a query-private materialization.

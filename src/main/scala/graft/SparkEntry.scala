@@ -2,72 +2,20 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{Queries, QueriesB, QueriesC, QueriesD, QueriesE, QueriesF, QueriesG, QueriesH, QueriesI, QueriesJ, QueriesK, QueriesL, QueriesM, QueriesN, QueriesO, QueriesP, QueriesQ, QueriesR, QueriesS, QueriesT, QueriesU, QueriesV, QueriesW, QueriesX, QueriesY, QueriesZ, QueriesAA, QueriesAB, QueriesAC, QueriesAD, QueriesAE, QueriesAF, QueriesAG, QueriesAH, QueriesAI, QueriesAJ, QueriesAK, QueriesAL, QueriesAM, QueriesAN, QueriesAO, QueriesAP, QueriesAQ, QueriesAR, QueriesAS, QueriesAT, QueriesAU, QueriesAV, QueriesAW, QueriesAX, QueriesAY, QueriesAZ}
+import graft.queries.QueryRegistry
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Entry points of the declared query surface (SURVEY.md §7). */
 object SparkEntry {
 
-  /** Flagship query (SURVEY §7.2 slice) on sf=0.001; driver smoke-checks rows>0. */
+  /** Flagship query (SURVEY §7.2 slice) on sf=0.001; a smoke check expects rows > 0. */
   def entry(spark: SparkSession): DataFrame =
-    Queries.q1PricingSummary.build(spark, "/root/testdata/sf0.001")
+    queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (Queries.all ++ QueriesB.all ++ QueriesC.all ++ QueriesD.all ++ QueriesE.all ++ QueriesF.all ++ QueriesG.all ++ QueriesH.all ++ QueriesI.all ++ QueriesJ.all ++ QueriesK.all ++ QueriesL.all ++ QueriesM.all ++ QueriesN.all ++ QueriesO.all ++ QueriesP.all ++ QueriesQ.all ++ QueriesR.all ++ QueriesS.all ++ QueriesT.all ++ QueriesU.all ++ QueriesV.all ++ QueriesW.all ++ QueriesX.all ++ QueriesY.all ++ QueriesZ.all ++ QueriesAA.all ++ QueriesAB.all ++ QueriesAC.all ++ QueriesAD.all ++ QueriesAE.all ++ QueriesAF.all ++ QueriesAG.all ++ QueriesAH.all ++ QueriesAI.all ++ QueriesAJ.all ++ QueriesAK.all ++ QueriesAL.all ++ QueriesAM.all ++ QueriesAN.all ++ QueriesAO.all ++ QueriesAP.all ++ QueriesAQ.all ++ QueriesAR.all ++ QueriesAS.all ++ QueriesAT.all ++ QueriesAU.all ++ QueriesAV.all ++ QueriesAW.all ++ QueriesAX.all ++ QueriesAY.all ++ QueriesAZ.all).map(q => q.name -> q.build).toMap
-
-  /** Bound every mirror's DuckDB peak memory (round 14, VERDICT item 1).
-    *
-    * DuckDB inlines non-MATERIALIZED CTEs at every reference, so a chain of
-    * iterative CTEs (power iterations, residual/codebook stages) re-plans
-    * and re-executes its whole upstream chain once per consumer — plan size
-    * and executor pre-allocations grow multiplicatively with chain depth.
-    * Measured at sf0.01 (the driver's verify SF): pca_deflation_top2
-    * 7.65 s / 791 MB → 0.22 s / 92 MB, sample_kcenter 3.90 → 0.95 s,
-    * pca_power_iteration 2.36 s / 344 MB → 0.18 s / 71 MB, simsearch_hnsw
-    * 10.0 → 4.5 s, with the all-260 sweep totalling 53.9 → 33.4 s and
-    * BIT-IDENTICAL results on every query (fetchall hash compared).
-    * Applied centrally so no individual mirror can drift back; RECURSIVE
-    * mirrors are left untouched (DuckDB cannot materialize a recursive CTE,
-    * and the two recursive mirrors were verified unchanged).
-    */
-  private val namedWindowClause =
-    java.util.regex.Pattern.compile("\\bWINDOW\\s+\\w+\\s+AS\\s*\\(")
-  private def materializeCtes(sql: String): String =
-    // skip RECURSIVE mirrors (DuckDB cannot materialize a recursive CTE)
-    // and mirrors with a named-WINDOW clause (`WINDOW w AS (...)` — and its
-    // comma continuations — share the exact " AS (" shape with a CTE and
-    // MATERIALIZED is a parse error there; all ten such mirrors are cheap,
-    // ≤155 MB / ≤0.2 s in the sweep, so skipping them costs nothing)
-    if (sql.contains("WITH RECURSIVE") || namedWindowClause.matcher(sql).find()) sql
-    else sql.replace(" AS (", " AS MATERIALIZED (")
-
-  /** The three mirrors the round-13 driver verify OOM'd on (DuckDB process
-    * `bad allocation`, i.e. malloc failure from environment-level memory
-    * pressure — all three produced correct rows in every builder-side run).
-    * They additionally self-bound their session: few threads (DuckDB
-    * pre-allocates per-thread operator state — simsearch_ivfpq measured
-    * 444 MB at 32 threads vs 120 MB at 1), a hard memory_limit, and a spill
-    * directory so hitting the limit degrades to disk instead of an abort.
-    * Multi-statement strings run fine through duckdb-python's
-    * `con.sql(...)`/`con.execute(...)` (the SETs apply, the SELECT is the
-    * returned relation) — and these three cannot regress from it: they are
-    * the queries currently failing verification.
-    */
-  private val memBoundPragmas =
-    "SET threads TO 8; SET memory_limit='2GB'; " +
-      "SET temp_directory='/tmp/graft_duckdb_spill'; "
-  private val memBoundQueries: Set[String] = Set(
-    "simsearch_ivfpq_rerank", "simsearch_matryoshka_recall",
-    "simsearch_topk_agg")
+  def queries: Map[String, (SparkSession, String) => DataFrame] = QueryRegistry.builds
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] = rawOracleSql.map { case (name, sql) =>
-    val bounded = materializeCtes(sql)
-    name -> (if (memBoundQueries(name)) memBoundPragmas + bounded else bounded)
-  }
-
-  private def rawOracleSql: Map[String, String] =
-    (Queries.all ++ QueriesB.all ++ QueriesC.all ++ QueriesD.all ++ QueriesE.all ++ QueriesF.all ++ QueriesG.all ++ QueriesH.all ++ QueriesI.all ++ QueriesJ.all ++ QueriesK.all ++ QueriesL.all ++ QueriesM.all ++ QueriesN.all ++ QueriesO.all ++ QueriesP.all ++ QueriesQ.all ++ QueriesR.all ++ QueriesS.all ++ QueriesT.all ++ QueriesU.all ++ QueriesV.all ++ QueriesW.all ++ QueriesX.all ++ QueriesY.all ++ QueriesZ.all ++ QueriesAA.all ++ QueriesAB.all ++ QueriesAC.all ++ QueriesAD.all ++ QueriesAE.all ++ QueriesAF.all ++ QueriesAG.all ++ QueriesAH.all ++ QueriesAI.all ++ QueriesAJ.all ++ QueriesAK.all ++ QueriesAL.all ++ QueriesAM.all ++ QueriesAN.all ++ QueriesAO.all ++ QueriesAP.all ++ QueriesAQ.all ++ QueriesAR.all ++ QueriesAS.all ++ QueriesAT.all ++ QueriesAU.all ++ QueriesAV.all ++ QueriesAW.all ++ QueriesAX.all ++ QueriesAY.all ++ QueriesAZ.all).flatMap(q => q.oracle.map(o => q.name -> o)).toMap
+  def oracleSql: Map[String, String] = QueryRegistry.oracleSql
 }

@@ -84,9 +84,6 @@ object Phys {
   def heightAboveGround(height: Column, stationAlt: Column): Column =
     greatest(lit(0.0), height - stationAlt)
 
-  /** F10: minutes within the hour (reference: ml/rf.py:260). */
-  def minutesInHour(epochS: Column): Column = (epochS % 3600) / 60
-
   /** F14: nearest-cadence floor of an epoch-seconds timestamp
     * (reference: common/utils.py:586-611 nearest_time).
     */
@@ -165,14 +162,6 @@ object Phys {
     (lonSec10k * 10000.0 / 3600.0, latSec10k * 10000.0 / 3600.0)
   }
 
-  /** F15 height companions (wgs84_ch1903.py:9-15, 46-55). */
-  def ch1903ToWgsHeight(east: Column, north: Column, h: Column): Column =
-    h + 49.55 - lit(12.60) * (east - 600000.0) / 1000000.0 -
-      lit(22.64) * (north - 200000.0) / 1000000.0
-  def wgs84ToChHeight(lonDeg: Column, latDeg: Column, h: Column): Column =
-    h - 49.55 + lit(2.73) * (lonDeg * 3600.0 - 26782.5) / 10000.0 +
-      lit(6.94) * (latDeg * 3600.0 - 169028.66) / 10000.0
-
   /** F15: COSMO rotated-pole transform — geographic → rotated lat/lon for a
     * rotated system whose north pole sits at geographic (polLatDeg,
     * polLonDeg) (the standard NWP grid rotation; MeteoSwiss COSMO-1 uses
@@ -215,12 +204,6 @@ object Phys {
     val lon = ((lonRaw + 180.0) % 360.0 + 360.0) % 360.0 - 180.0
     (lon, degrees(asin(c)))
   }
-
-  /** F13: `YYYYMMDDHHMM` string → epoch seconds
-    * (reference: common/utils.py:195-224 timestamp_from_datestr).
-    */
-  def timestampFromDatestr(c: Column): Column =
-    unix_timestamp(c, "yyyyMMddHHmm")
 
   /** O4: searchsorted against a small sorted boundary array — DN scale
     * encode/decode (reference: qpe/qpe.py:276 searchsorted(SCALE_CPC);

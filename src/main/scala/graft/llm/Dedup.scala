@@ -11,12 +11,6 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   val P: Long = 1000000007L
-  /** MinHash permutation parameters, fixed and engine-mirrorable:
-    * a_i = (654435747·(i+1)) mod P, b_i = (654602297·(i+1)) mod P
-    * (Knuth multiplicative constants reduced mod P).
-    */
-  def paramA(i: Column): Column = (lit(654435747L) * (i + 1)) % P
-  def paramB(i: Column): Column = (lit(654602297L) * (i + 1)) % P
 
   /** Exact dedup: hash-groupBy on content; canonical id = min id, n = group
     * size. One shuffle on the text (Spark hashes internally); at 100 TB scale
@@ -90,24 +84,6 @@ object Dedup {
         when(col("n_windows") > 0,
           round(col("n_dup_windows").cast("double") / col("n_windows"), 6))
         .otherwise(lit(0.0)))
-  }
-
-  /** Per-doc distinct shingle counts as a zero-shuffle projection. Only for
-    * SINGLE-consumer plans: each reference duplicates the whole gram
-    * construction (no cache behind it), which measured slower than reading
-    * the cached exploded relation when sizes joins twice.
-    */
-  def shingleSizesProjection(df: DataFrame, idCol: String, textCol: String,
-                             n: Int): DataFrame = {
-    // staged token split — the shingles() lambda rule
-    val toks = col("__toks")
-    val idx = when(size(toks) >= n, sequence(lit(1), size(toks) - (n - 1)))
-      .otherwise(array().cast("array<int>"))
-    graft.Core.fanOut(df)
-      .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__toks"))
-      .select(col(idCol), size(array_distinct(
-        transform(idx, i => concat_ws(" ", slice(toks, i, lit(n)))))).cast("long").as("sz"))
-      .filter(col("sz") > 0)
   }
 
   /** N-gram Jaccard similarity via inverted-index self-join: pairs sharing at
@@ -363,6 +339,10 @@ object Dedup {
     df.join(maybeBroadcast(drop), Seq(idCol), "left_anti")
   }
 
+  /** MinHash permutation parameters, fixed and engine-mirrorable:
+    * a_i = (654435747·(i+1)) mod P, b_i = (654602297·(i+1)) mod P
+    * (Knuth multiplicative constants reduced mod P).
+    */
   private def aConst(i: Int): Long = (654435747L * (i + 1)) % P
   private def bConst(i: Int): Long = (654602297L * (i + 1)) % P
 

@@ -194,15 +194,18 @@ object Graph {
   }
 
   /** Shared tail: score + rank directed pair supports against the item
-    * marginals and basket total.
+    * marginals and basket total. The basket total is `distinct().count()`
+    * as a 1-row relation cross-joined in, so building the rules launches
+    * no Spark job.
     */
   private def rulesFromDirected(b: DataFrame, pairs: DataFrame,
                                 k: Int): DataFrame = {
-    val nBaskets = b.select(col("ok")).distinct().count()
+    val nBaskets = col("__n_baskets")
     val itemN = b.groupBy(col("item")).agg(count(lit(1)).as("n_i"))
     pairs
       .join(itemN.select(col("item").as("ante"), col("n_i").as("n_a")), Seq("ante"))
       .join(itemN.select(col("item").as("cons"), col("n_i").as("n_b")), Seq("cons"))
+      .crossJoin(b.select(col("ok")).distinct().agg(count(lit(1)).as("__n_baskets")))
       .select(col("ante"), col("cons"), col("n_ab"),
         round(col("n_ab").cast("double") / nBaskets, 6).as("support"),
         round(col("n_ab").cast("double") / col("n_a").cast("double"), 6)

@@ -72,9 +72,10 @@ object HydroClass {
     * of the reference's `cdist(..., w=weights)`.
     *
     * Spark-first realization: the per-group centroid tables are static
-    * constants, so the whole classifier compiles to ONE codegen'd
-    * projection — a `when` chain on the group column dispatching to that
-    * group's argmin-distance `when` chain. No join, no shuffle, no UDF;
+    * constants, so the whole classifier compiles to codegen'd projections —
+    * one distance column per (group, centroid), then a `when` chain on the
+    * group column dispatching to that group's argmin `when` chain over
+    * those columns. No join, no shuffle, no UDF;
     * at 100 TB this is a map-only pass. Rows whose group has no centroid
     * table classify as null (the reference's NaN → "no data").
     */
@@ -97,23 +98,32 @@ object HydroClass {
         if (p == 2.0) lit(weights(i)) * d * d
         else lit(weights(i)) * pow(abs(d), p)
       }.reduce(_ + _)
-    val byGroup = centroidsByGroup.toSeq.sortBy(_._1).map { case (g, cs) =>
-      val dists = cs.map(c => c.hydroClass -> distTo(c))
-      val minD = least(dists.map(_._2): _*)
+    // each centroid distance is computed ONCE, in its own column below the
+    // argmin (null outside its group): inlined into the least/when chains
+    // every distance tree repeats per reference, and the generated code
+    // outgrows the JVM's 64 KB method limit and falls off codegen
+    val byGroup = centroidsByGroup.toSeq.sortBy(_._1).zipWithIndex.map { case ((g, cs), gi) =>
+      val dists = cs.zipWithIndex.map { case (c, ci) =>
+        (c.hydroClass, s"__hd_${gi}_$ci", when(col(groupCol) === g, distTo(c)))
+      }
+      val minD = least(dists.map(d => col(d._2)): _*)
       // ties resolve to declaration order, like classify
       val cls = dists.foldRight(lit(null).cast("string")) {
-        case ((name, d), acc) => when(d === minD, lit(name)).otherwise(acc)
+        case ((name, d, _), acc) => when(col(d) === minD, lit(name)).otherwise(acc)
       }
-      (g, cls, minD)
+      (g, cls, minD, dists)
     }
     val clsAll = byGroup.foldRight(lit(null).cast("string")) {
-      case ((g, cls, _), acc) => when(col(groupCol) === g, cls).otherwise(acc)
+      case ((g, cls, _, _), acc) => when(col(groupCol) === g, cls).otherwise(acc)
     }
     val distAll = byGroup.foldRight(lit(null).cast("double")) {
-      case ((g, _, d), acc) => when(col(groupCol) === g, d).otherwise(acc)
+      case ((g, _, d, _), acc) => when(col(groupCol) === g, d).otherwise(acc)
     }
-    df.withColumn("hydro_class", clsAll)
+    val distCols = byGroup.flatMap(_._4)
+    df.select(col("*") +: distCols.map { case (_, name, d) => d.as(name) }: _*)
+      .withColumn("hydro_class", clsAll)
       .withColumn("hydro_dist",
         if (p == 2.0) sqrt(distAll) else pow(distAll, lit(1.0 / p)))
+      .drop(distCols.map(_._2): _*)
   }
 }

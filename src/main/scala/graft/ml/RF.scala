@@ -126,18 +126,4 @@ object RF {
     }
   }
 
-  /** M5/M9: K-fold cross-validation by a precomputed fold column (event-split
-    * via Windows.sessionize or year-split), driver loop over folds calling
-    * the distributed fit/score primitives (reference: ml/rf.py:846-1331).
-    */
-  def crossValidate(df: DataFrame, features: Seq[String], labelCol: String,
-                    foldCol: String, k: Int,
-                    numTrees: Int = 15, maxDepth: Int = 20): Seq[(Int, Double)] =
-    (0 until k).map { fold =>
-      val train = df.filter(col(foldCol) =!= fold)
-      val test = df.filter(col(foldCol) === fold)
-      val m = fit(train, features, labelCol, numTrees, maxDepth,
-        featureSubset = "auto")
-      fold -> rmse(predict(m, test), "prediction_bc", labelCol)
-    }
 }

@@ -138,16 +138,6 @@ object Agg {
       .withColumn("estimate", col("sum_vw") / col("sum_w"))
   }
 
-  /** A7: hourly rollup of sub-hourly estimates
-    * (reference: ml/rf.py:564-588; qpe/evaluation.py:159-175).
-    */
-  def hourlyMean(df: DataFrame, key: String, tsCol: String,
-                 valueCols: Seq[String]): DataFrame = {
-    val aggs = valueCols.map(c => avg(col(c)).as(s"${c}_hmean"))
-    df.groupBy(col(key), date_trunc("hour", col(tsCol)).as("hour"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
   /** A13: null-aware mean of two columns — temporal smoothing of consecutive
     * feature grids (reference: qpe/qpe.py:684 nanmean over a 2-stack).
     */
@@ -579,15 +569,6 @@ object Agg {
     df.sparkSession.createDataFrame(
       df.sparkSession.sparkContext.parallelize(rows, 1), schema)
   }
-
-  /** A14: cross-fold statistics rollup (reference: ml/rf.py:905,1268-1293). */
-  def statsRollup(df: DataFrame, groupCols: Seq[String], valueCol: String): DataFrame =
-    df.groupBy(groupCols.map(col): _*).agg(
-      avg(col(valueCol)).as("mean"),
-      stddev_samp(col(valueCol)).as("std"),
-      min(col(valueCol)).as("min"),
-      max(col(valueCol)).as("max"),
-      count(col(valueCol)).as("n"))
 
   /** Adaptive equi-width histogram of a numeric column: exact min/max fix
     * the bounds (one cheap agg pass), then every row maps to

@@ -68,17 +68,6 @@ object AsOf {
       .select(leftCols.map(col) ++ valueCols.map(c => col("__r").getField(c).as(c)): _*)
   }
 
-  /** J7 as the reference does it: floor both sides to a common cadence and
-    * equi-join on (key, bucket) — no as-of machinery needed when both feeds
-    * are on fixed grids.
-    */
-  def bucketJoin(left: DataFrame, right: DataFrame, key: String, tsCol: String,
-                 bucketSeconds: Long): DataFrame = {
-    val b = (d: DataFrame) => d.withColumn("__bucket",
-      (unix_timestamp(col(tsCol)) - unix_timestamp(col(tsCol)) % bucketSeconds))
-    b(left).join(b(right).drop(tsCol), Seq(key, "__bucket"), "left").drop("__bucket")
-  }
-
   /** Range join: `left.ts ∈ [right.start, right.end]` — Catalyst plans the
     * raw theta-join as BroadcastNestedLoop/cartesian, which dies at scale.
     * Rewrite: bucketize time into fixed-width cells, explode each right

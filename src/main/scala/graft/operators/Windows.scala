@@ -91,15 +91,6 @@ object Windows {
     df.withColumn(as, avg(valueCol).over(w))
   }
 
-  /** W7: previous-timestep state in batch mode — lag over event time per key
-    * (reference: qpe/qpe.py:380-403 qpe_prev/X_prev pairing). The streaming
-    * equivalent lives in graft.streaming (R4 mapGroupsWithState).
-    */
-  def lagState(df: DataFrame, key: String, tsCol: String, valueCol: String,
-               as: String = "prev"): DataFrame =
-    df.withColumn(as,
-      lag(col(valueCol), 1).over(Window.partitionBy(col(key)).orderBy(col(tsCol))))
-
   /** F6 building block: per-ray cumulative sum ordered by range gate — the
     * integral term of the ZPHI attenuation correction
     * (reference: common/radarprocessing.py:271-305).

@@ -121,18 +121,17 @@ private[queries] object Ora {
     * order and the 9-dp sigmoid round cannot drift between mirrors.
     */
   def irlsStepsSql(iters: Int): String = {
-    val decS = (e: String) => s"CAST(SUM(CAST(($e) AS DECIMAL(27,10))) AS DOUBLE)"
     (1 to iters).map { i =>
       s"""p$i AS (SELECT y, x1, x2,
           ROUND(1.0 / (1.0 + EXP(-(b.b0 + b.b1 * x1 + b.b2 * x2))), 9) AS p
           FROM base CROSS JOIN bet${i - 1} b),
         q$i AS (SELECT y, x1, x2, p, p * (1.0 - p) AS w FROM p$i),
         m$i AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-          ${decS("w")} AS a11, ${decS("w * x1")} AS a12,
-          ${decS("w * x2")} AS a13, ${decS("w * x1 * x1")} AS a22,
-          ${decS("w * x1 * x2")} AS a23, ${decS("w * x2 * x2")} AS a33,
-          ${decS("y - p")} AS g1, ${decS("(y - p) * x1")} AS g2,
-          ${decS("(y - p) * x2")} AS g3
+          ${dsumSql("w")} AS a11, ${dsumSql("w * x1")} AS a12,
+          ${dsumSql("w * x2")} AS a13, ${dsumSql("w * x1 * x1")} AS a22,
+          ${dsumSql("w * x1 * x2")} AS a23, ${dsumSql("w * x2 * x2")} AS a33,
+          ${dsumSql("y - p")} AS g1, ${dsumSql("(y - p) * x1")} AS g2,
+          ${dsumSql("(y - p) * x2")} AS g3
           FROM q$i),
         bet$i AS (SELECT m.n,
           b.b0 + (m.g1 * (m.a22 * m.a33 - m.a23 * m.a23) -

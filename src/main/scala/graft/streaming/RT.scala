@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Real-time mode as Structured Streaming (SURVEY.md §2.8).
@@ -54,14 +54,12 @@ object RT {
     .option("partitionOverwriteMode", "dynamic")
     .partitionBy("applied_batch").parquet(outPath)
 
-  /** R1: file source + 5-min processing trigger
+  /** R1: file source; the caller's trigger sets the cadence
     * (reference: qpe_rt_daemon.py:865-873 sleep-to-next-slot loop).
     */
   def fileStream(spark: SparkSession, path: String, schema: StructType,
                  options: Map[String, String] = Map.empty): DataFrame =
     spark.readStream.schema(schema).options(options).parquet(path)
-
-  def fiveMinuteTrigger: Trigger = Trigger.ProcessingTime("5 minutes")
 
   /** R1 windowed aggregation: tumbling event-time windows + watermark
     * (reference cadence: one product per 5 min, qpe/qpe.py:374-378).

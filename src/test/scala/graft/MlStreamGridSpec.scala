@@ -83,6 +83,20 @@ class MlStreamGridSpec extends SparkSpec {
     assert(!plan.contains("SinglePartition"))
   }
 
+  test("permutationImportance: the label's own feature carries the importance (sf0.001)") {
+    // label is a function of l_quantity alone; l_discount is unrelated
+    val li = Core.table(spark, "/root/testdata/sf0.001", "lineitem")
+      .select(col("l_quantity").as("qty"), col("l_discount").as("disc"),
+        (col("l_quantity") * 3.0 + 5.0).as("label"))
+    val model = RF.fit(li, Seq("qty", "disc"), "label", numTrees = 5, maxDepth = 6)
+    val imp = RF.permutationImportance(model, li, "label")
+    assert(imp.map(_._1) == Seq("qty", "disc"))
+    val m = imp.toMap
+    assert(m("qty") > 1.0, imp)
+    assert(math.abs(m("disc")) < 0.1 * m("qty"), imp)
+    assert(RF.permutationImportance(model, li, "label") == imp) // deterministic
+  }
+
   test("streaming completeness: all sources arrived → complete quality string") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
