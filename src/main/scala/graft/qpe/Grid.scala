@@ -1,15 +1,19 @@
 package graft.qpe
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Gridded QPE pipeline (SURVEY.md §3.3, §7.1 step 5).
   *
   * Everything up to the per-cell weighted feature accumulation is distributed
-  * DataFrame work (LUT broadcast joins J5/J6 + the A9 groupBy); the final
-  * 640×710 grid (454,400 cells ≈ 1.8 MB) is collected and post-processed on
-  * the driver with 2-D image kernels — deliberately NOT distributed
-  * (SURVEY §7.3: a shuffle for a 1.8 MB array is pure overhead).
+  * DataFrame work (the J5/J6 LUT joins + the A9 groupBy). [[lutJoin]]
+  * broadcasts the LUT for a one-shot gather; the QPE slot
+  * (`Qpe.gridStage`) instead broadcasts its gates into the LUT partitioned
+  * by cell once per session, so [[accumulate]] runs there without a
+  * shuffle. The final 640×710 grid (454,400 cells ≈ 1.8 MB) is collected
+  * and post-processed on the driver with 2-D image kernels that write into
+  * preallocated arrays — deliberately NOT distributed (SURVEY §7.3: a
+  * shuffle for a 1.8 MB array is pure overhead).
   */
 object Grid {
 
@@ -25,7 +29,8 @@ object Grid {
 
   /** A9: weighted accumulation of per-sweep/per-radar contributions into
     * grid cells, then the final Σ(v·w)/Σw (reference: qpe/qpe.py:613-656,
-    * 670-676). One shuffle on the cell key.
+    * 670-676). One shuffle on the cell key, unless `contribs` is already
+    * partitioned by it.
     */
   def accumulate(contribs: DataFrame): DataFrame = {
     // invalid (NULL/NaN) contributions are dropped from BOTH sums up front:
@@ -54,15 +59,21 @@ object Grid {
     * grid. Missing cells are NaN (the reference's masked cells).
     */
   def collectGrid(cells: DataFrame, nx: Int = NX, ny: Int = NY): Array[Array[Double]] = {
-    val grid = Array.fill(nx, ny)(Double.NaN)
+    val grid = Array.ofDim[Double](nx, ny)
+    grid.foreach(java.util.Arrays.fill(_, Double.NaN))
     // degenerate NULL values (decimal-sum overflow) stay NaN cells instead
-    // of crashing the row match
-    cells.select(col("chx").cast("int"), col("chy").cast("int"),
+    // of reaching the positional getters
+    val rows = cells.select(col("chx").cast("int"), col("chy").cast("int"),
         col("value").cast("double"))
       .filter(col("value").isNotNull)
-      .collect().foreach { case Row(x: Int, y: Int, v: Double) =>
-        if (x >= 0 && x < nx && y >= 0 && y < ny) grid(x)(y) = v
-      }
+      .collect()
+    var i = 0
+    while (i < rows.length) {
+      val r = rows(i)
+      val x = r.getInt(0); val y = r.getInt(1)
+      if (x >= 0 && x < nx && y >= 0 && y < ny) grid(x)(y) = r.getDouble(2)
+      i += 1
+    }
     grid
   }
 
@@ -142,19 +153,22 @@ object Grid {
                      zmax: Double = 3.0): Array[Array[Double]] = {
     val nx = grid.length
     val ny = grid(0).length
-    val out = Array.tabulate(nx, ny)((x, y) => grid(x)(y))
+    val out = grid.map(_.clone())
     var x = 0
     while (x < nx) {
+      val iHi = math.min(nx - 1, x + k)
       var y = 0
       while (y < ny) {
         val v = grid(x)(y)
         if (!v.isNaN) {
+          val jHi = math.min(ny - 1, y + k)
           var s = 0.0; var s2 = 0.0; var n = 0
           var i = math.max(0, x - k)
-          while (i <= math.min(nx - 1, x + k)) {
+          while (i <= iHi) {
+            val row = grid(i)
             var j = math.max(0, y - k)
-            while (j <= math.min(ny - 1, y + k)) {
-              val w = grid(i)(j)
+            while (j <= jHi) {
+              val w = row(j)
               if (!w.isNaN) { s += w; s2 += w * w; n += 1 }
               j += 1
             }
@@ -179,26 +193,34 @@ object Grid {
     val radius = math.max(1, math.ceil(3 * sigma).toInt)
     val kernel = Array.tabulate(2 * radius + 1)(i =>
       math.exp(-0.5 * math.pow((i - radius) / sigma, 2)))
-    def pass(src: Array[Array[Double]], horizontal: Boolean): Array[Array[Double]] = {
+    def pass(src: Array[Array[Double]], alongX: Boolean): Array[Array[Double]] = {
       val nx = src.length; val ny = src(0).length
-      Array.tabulate(nx, ny) { (x, y) =>
-        if (src(x)(y).isNaN) Double.NaN
-        else {
-          var s = 0.0; var wsum = 0.0
-          var d = -radius
-          while (d <= radius) {
-            val (i, j) = if (horizontal) (x + d, y) else (x, y + d)
-            if (i >= 0 && i < nx && j >= 0 && j < ny && !src(i)(j).isNaN) {
-              val w = kernel(d + radius)
-              s += w * src(i)(j); wsum += w
+      val out = Array.ofDim[Double](nx, ny)
+      var x = 0
+      while (x < nx) {
+        var y = 0
+        while (y < ny) {
+          if (src(x)(y).isNaN) out(x)(y) = Double.NaN
+          else {
+            // the in-bounds taps, in ascending offset order
+            val c = if (alongX) x else y
+            var s = 0.0; var wsum = 0.0
+            var d = math.max(-radius, -c)
+            val dHi = math.min(radius, (if (alongX) nx else ny) - 1 - c)
+            while (d <= dHi) {
+              val u = if (alongX) src(x + d)(y) else src(x)(y + d)
+              if (!u.isNaN) { val w = kernel(d + radius); s += w * u; wsum += w }
+              d += 1
             }
-            d += 1
+            out(x)(y) = s / wsum
           }
-          s / wsum
+          y += 1
         }
+        x += 1
       }
+      out
     }
-    pass(pass(grid, horizontal = true), horizontal = false)
+    pass(pass(grid, alongX = true), alongX = false)
   }
 
   /** W5 distributed variant: separable NaN-aware Gaussian smoothing over a

@@ -1,7 +1,8 @@
 package graft.qpe
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Phys
 
@@ -10,16 +11,20 @@ import graft.functions.Phys
   * drives end to end:
   *
   *   distributed: polar gates → SNR mask (F4) → dB→linear (F1) → visibility
-  *   correction (F3) → polar→Cartesian LUT broadcast join (J5) → weighted
-  *   cell accumulation (A9);
+  *   correction (F3) → gate→cell join (J5) → weighted cell accumulation (A9);
   *   driver kernels on the collected 1.8 MB grid: 7×7 outlier removal (W4)
   *   → Gaussian σ=0.5 smoothing (W5) → validity-floor clamp (P11);
   *   sinks: ODIM grid (S12), palette GIF (S13), raw DN bytes.
   *
-  * The split mirrors the reference exactly: everything per-gate/per-cell is
-  * a single declarative Spark plan; the 2-D image kernels run on the
-  * driver because a shuffle for a 1.8 MB array is pure overhead
-  * (SURVEY §7.3).
+  * Stage split. The reference loads its lookup tables once and re-runs the
+  * compute every 5 minutes against them; here the LUT is likewise
+  * partitioned by cell once per session ([[lutByCell]]) and the slot's
+  * corrected gates, the small side, are broadcast into it. The join's
+  * output is already partitioned by cell, so a slot runs one stage of
+  * grid work (after the gate broadcast) and no shuffle. The 2-D image
+  * kernels run on the driver because a shuffle for a 1.8 MB array is pure
+  * overhead (SURVEY §7.3); they loop over preallocated arrays, with no
+  * per-cell allocation.
   */
 object Qpe {
 
@@ -36,17 +41,33 @@ object Qpe {
 
   /** Distributed stage: corrected linear reflectivity accumulated into
     * Cartesian cells. `polar` needs (sweep, az_idx, rng_idx, zh, noise,
-    * visib, w); `lut` maps gates to (chx, chy).
+    * visib, w); `lut` maps gates to (chx, chy). The corrected gates are
+    * broadcast into [[lutByCell]], so the A9 groupBy needs no shuffle.
     */
   def gridStage(polar: DataFrame, lut: DataFrame, cfg: Config = Config()): DataFrame = {
     val masked = Phys.snrMask(col("zh"), col("noise"), cfg.snrThreshold)
     val corrected = Phys.visibCorrect(
       Phys.dbToLin(masked), col("visib"), cfg.minVisib, cfg.maxVisibCorr)
+    val gates = polar
+      .select(col("sweep"), col("az_idx"), col("rng_idx"), corrected.as("v"), col("w"))
+      .filter(col("v").isNotNull)
     Grid.accumulate(
-      Grid.lutJoin(polar, lut)
-        .withColumn("v", corrected)
-        .filter(col("v").isNotNull)
+      lutByCell(lut).join(broadcast(gates), Seq("sweep", "az_idx", "rng_idx"))
         .select(col("chx"), col("chy"), col("v"), col("w")))
+  }
+
+  /** `lut` hash-partitioned by cell into the session's
+    * `spark.sql.shuffle.partitions` partitions and persisted on first use.
+    * A LUT is static for a session: every later call builds the same plan,
+    * which Spark's CacheManager resolves to the persisted copy, so the
+    * repartition runs once and later slots read it without an exchange.
+    * A LUT that changes under the same plan (files rewritten in place) is
+    * read from the stale copy until `lut.unpersist()` drops it.
+    */
+  private def lutByCell(lut: DataFrame): DataFrame = {
+    val byCell = lut.repartition(col("chx"), col("chy"))
+    if (byCell.storageLevel == StorageLevel.NONE) byCell.persist()
+    byCell
   }
 
   /** Driver kernel stage: collected grid → outlier removal → smoothing →
@@ -56,7 +77,23 @@ object Qpe {
     val grid = Grid.collectGrid(cells, cfg.nx, cfg.ny)
     val cleaned = Grid.outlierRemoval(grid, cfg.outlierK, cfg.outlierZ)
     val smoothed = Grid.gaussianSmooth(cleaned, cfg.gaussianSigma)
-    smoothed.map(_.map(v => if (!v.isNaN && v < cfg.minValid) 0.0 else v))
+    clampValid(smoothed, cfg.minValid)
+    smoothed
+  }
+
+  /** P11 validity floor, in place: finite values below `minValid` become 0. */
+  def clampValid(grid: Array[Array[Double]], minValid: Double): Unit = {
+    var x = 0
+    while (x < grid.length) {
+      val row = grid(x)
+      var y = 0
+      while (y < row.length) {
+        val v = row(y)
+        if (!v.isNaN && v < minValid) row(y) = 0.0
+        y += 1
+      }
+      x += 1
+    }
   }
 
   /** Product writes for one timestep: ODIM grid + palette GIF (the

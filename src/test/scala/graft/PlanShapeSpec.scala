@@ -146,4 +146,66 @@ class PlanShapeSpec extends SparkSpec {
       "day-partitioned fact join must carry a dynamic partition pruning " +
         "subquery:\n" + plan.linesIterator.take(20).mkString("\n"))
   }
+
+  test("QPE slot: two jobs, gates broadcast over their scan, the LUT read from its cell-partitioned copy") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.qpe.Qpe
+    object H extends AdaptiveSparkPlanHelper
+
+    // the daemon's shape: a cached LUT, each slot's gates read from the spool
+    val lut = QpeFixtures.lut(spark).cache()
+    assert(lut.rdd.getNumPartitions >= 4)
+    val spool = java.nio.file.Files.createTempDirectory("graft_qpe_plan").toString
+    Seq(0 until 5, 0 until 4).zipWithIndex.foreach { case (radars, i) =>
+      QpeFixtures.polar(spark, radars).write.parquet(s"$spool/slot=$i")
+    }
+    val gateSchema = QpeFixtures.polar(spark, Seq(0)).schema
+    def slot(i: Int) = Qpe.kernelStage(
+      Qpe.gridStage(spark.read.schema(gateSchema).parquet(s"$spool/slot=$i"), lut, QpeFixtures.Cfg),
+      QpeFixtures.Cfg)
+    slot(0) // warm: the first slot partitions the LUT by cell
+
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val jobs = new AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val listeners = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].listenerManager
+    drain()
+    sc.addSparkListener(jobListener)
+    listeners.register(planListener)
+    try { slot(1); drain() } finally {
+      sc.removeSparkListener(jobListener)
+      listeners.unregister(planListener)
+    }
+
+    assert(jobs.get == 2, s"a warm slot should start 2 jobs (gate broadcast, grid), started ${jobs.get}")
+    assert(plans.size == 1)
+    val plan = plans.peek()
+    val shown = plan.toString
+    assert(H.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"the grid stage must not shuffle:\n$shown")
+    val broadcasts = H.collect(plan) { case b: BroadcastExchangeExec => b }
+    assert(broadcasts.size == 1, shown)
+    assert(H.find(broadcasts.head)(_.isInstanceOf[InMemoryTableScanExec]).isEmpty,
+      s"the LUT must not be broadcast:\n$shown")
+    assert(H.find(broadcasts.head)(_.isInstanceOf[FileSourceScanExec]).nonEmpty,
+      s"the broadcast must sit over the gate scan:\n$shown")
+    assert(H.find(plan)(_.isInstanceOf[InMemoryTableScanExec]).nonEmpty, shown)
+  }
 }

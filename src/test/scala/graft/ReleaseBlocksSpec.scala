@@ -42,4 +42,18 @@ class ReleaseBlocksSpec extends SparkSpec {
     assert(b.count() == 20)
     Core.releaseTransientBlocks(spark)
   }
+
+  test("a QPE slot after the block release and a LUT unpersist is bit-identical") {
+    import graft.qpe.Qpe
+    val lut = QpeFixtures.lut(spark).cache()
+    def slot() = Qpe.kernelStage(
+      Qpe.gridStage(QpeFixtures.polar(spark, 0 until 5), lut, QpeFixtures.Cfg), QpeFixtures.Cfg)
+    val first = slot()
+    // drops the LUT's cell-partitioned copy's blocks, then the LUT itself
+    Core.releaseTransientBlocks(spark)
+    lut.unpersist()
+    val again = slot()
+    assert(QpeFixtures.gridSha(again) == QpeFixtures.gridSha(first))
+    assert(first.flatten.exists(v => !v.isNaN && v > 0))
+  }
 }
