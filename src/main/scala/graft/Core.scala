@@ -16,6 +16,15 @@ object Core {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Streaming checkpoints go through [[graft.streaming.LocalFsCheckpointFileManager]]:
+    * Spark's FileContext manager, minus the `readlink`/`chmod` forks of its
+    * local-path writes. A fixed setting of every graft session, the test
+    * session included; not an option.
+    */
+  val CheckpointManagerConf: (String, String) =
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[graft.streaming.LocalFsCheckpointFileManager].getName
+
   /** Session with the reference's confs (database.py:18-24): 100 MB broadcast
     * threshold, case-sensitive resolution, plus scale-oriented defaults (AQE on,
     * shuffle partitions sized for local[32]; on a real cluster these are
@@ -34,6 +43,7 @@ object Core {
       // arithmetic) instead of TIMESTAMP_NTZ
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config(CheckpointManagerConf._1, CheckpointManagerConf._2)
 
   def session(appName: String = "graft", master: String = "local[*]"): SparkSession =
     withGraftConfs(SparkSession.builder().master(master).appName(appName), "32")
@@ -257,6 +267,25 @@ object Core {
     sc.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!keep.contains(id)) rdd.unpersist(blocking = false)
     }
+  }
+
+  /** Persist `df` unless a live copy of its plan is cached. After
+    * [[releaseTransientBlocks]] a released copy is still listed by the
+    * CacheManager, and `storageLevel` still reports its level, but its RDD
+    * is no longer persisted, so every use recomputes it from lineage. Such a
+    * stale entry is dropped and the plan persisted again.
+    */
+  def persistLive(df: DataFrame): DataFrame = {
+    val cached = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    val live = cached.exists(cd => df.sparkSession.sparkContext.getPersistentRDDs
+      .contains(cd.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id))
+    if (!live) {
+      if (cached.nonEmpty) df.unpersist(blocking = false)
+      df.persist()
+    }
+    df
   }
 
   /** Loud integral-id contract check shared by the Long-keyed operators

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * DataFrame work (the J5/J6 LUT joins + the A9 groupBy). [[lutJoin]]
   * broadcasts the LUT for a one-shot gather; the QPE slot
   * (`Qpe.gridStage`) instead broadcasts its gates into the LUT partitioned
-  * by cell once per session, so [[accumulate]] runs there without a
-  * shuffle. The final 640×710 grid (454,400 cells ≈ 1.8 MB) is collected
+  * by cell once per session, so A9's per-cell half ([[cellValues]]) runs
+  * there without a shuffle. The final 640×710 grid (454,400 cells ≈ 1.8 MB) is collected
   * and post-processed on the driver with 2-D image kernels that write into
   * preallocated arrays — deliberately NOT distributed (SURVEY §7.3: a
   * shuffle for a 1.8 MB array is pure overhead).
@@ -30,9 +30,18 @@ object Grid {
   /** A9: weighted accumulation of per-sweep/per-radar contributions into
     * grid cells, then the final Σ(v·w)/Σw (reference: qpe/qpe.py:613-656,
     * 670-676). One shuffle on the cell key, unless `contribs` is already
-    * partitioned by it.
+    * partitioned by it. The composition of [[contribTerms]] (per
+    * contribution) and [[cellValues]] (per cell), so a caller whose
+    * contributions fan out to several cells can apply the terms before
+    * the fan-out.
     */
-  def accumulate(contribs: DataFrame): DataFrame = {
+  def accumulate(contribs: DataFrame): DataFrame = cellValues(contribTerms(contribs))
+
+  /** A9's per-contribution half: drops invalid contributions and replaces
+    * `v`, `w` with the decimal terms [[cellValues]] sums, `vw_dec` and
+    * `w_dec`; every other column passes through.
+    */
+  def contribTerms(contribs: DataFrame): DataFrame = {
     // invalid (NULL/NaN) contributions are dropped from BOTH sums up front:
     // the decimal accumulator turns NaN into NULL, so without this filter a
     // NaN gate would vanish from the numerator while its weight still
@@ -41,19 +50,24 @@ object Grid {
     // a cell with no valid contribution disappears, = NaN in collectGrid)
     val valid = col("v").isNotNull && !isnan(col("v").cast("double")) &&
       col("w").isNotNull && !isnan(col("w").cast("double"))
+    val rest = contribs.columns.filterNot(c => c == "v" || c == "w").map(col).toSeq
+    contribs.filter(valid).select(rest ++ Seq(
+      (col("v") * col("w")).cast("decimal(32,14)").as("vw_dec"),
+      col("w").cast("decimal(32,14)").as("w_dec")): _*)
+  }
+
+  /** A9's per-cell half over [[contribTerms]] rows: (chx, chy, value). */
+  def cellValues(terms: DataFrame): DataFrame =
     // sums round in DECIMAL space (6 dp) before the double cast — the
     // dsum6 rule: a raw scale-14 sum's unscaled value passes 2^53 once the
     // sum exceeds ~90 and DuckDB's decimal→double cast double-rounds there
     // (last-ulp j5 mismatches at sf0.1); the ratio then divides the same
     // exactly-representable operands on both engines
-    contribs.filter(valid).groupBy(col("chx"), col("chy"))
-      .agg(round(sum((col("v") * col("w")).cast("decimal(32,14)")), 6)
-             .cast("double").as("sum_vw"),
-           round(sum(col("w").cast("decimal(32,14)")), 6)
-             .cast("double").as("sum_w"))
+    terms.groupBy(col("chx"), col("chy"))
+      .agg(round(sum(col("vw_dec")), 6).cast("double").as("sum_vw"),
+           round(sum(col("w_dec")), 6).cast("double").as("sum_w"))
       .withColumn("value", col("sum_vw") / col("sum_w"))
       .select("chx", "chy", "value")
-  }
 
   /** Collect a (chx, chy, value) cell DataFrame into a dense driver-side
     * grid. Missing cells are NaN (the reference's masked cells).

@@ -2,7 +2,6 @@ package graft.qpe
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Phys
 
@@ -48,12 +47,14 @@ object Qpe {
     val masked = Phys.snrMask(col("zh"), col("noise"), cfg.snrThreshold)
     val corrected = Phys.visibCorrect(
       Phys.dbToLin(masked), col("visib"), cfg.minVisib, cfg.maxVisibCorr)
-    val gates = polar
+    // A9's decimal terms once per gate, before the broadcast: a gate joins
+    // several cells, and the casts are most of the grid stage's CPU
+    val gates = Grid.contribTerms(polar
       .select(col("sweep"), col("az_idx"), col("rng_idx"), corrected.as("v"), col("w"))
-      .filter(col("v").isNotNull)
-    Grid.accumulate(
+      .filter(col("v").isNotNull))
+    Grid.cellValues(
       lutByCell(lut).join(broadcast(gates), Seq("sweep", "az_idx", "rng_idx"))
-        .select(col("chx"), col("chy"), col("v"), col("w")))
+        .select(col("chx"), col("chy"), col("vw_dec"), col("w_dec")))
   }
 
   /** `lut` hash-partitioned by cell into the session's
@@ -61,14 +62,13 @@ object Qpe {
     * A LUT is static for a session: every later call builds the same plan,
     * which Spark's CacheManager resolves to the persisted copy, so the
     * repartition runs once and later slots read it without an exchange.
-    * A LUT that changes under the same plan (files rewritten in place) is
-    * read from the stale copy until `lut.unpersist()` drops it.
+    * A copy whose blocks `Core.releaseTransientBlocks` dropped is persisted
+    * again by the next slot. A LUT that changes under the same plan (files
+    * rewritten in place) is read from the stale copy until `lut.unpersist()`
+    * drops it.
     */
-  private def lutByCell(lut: DataFrame): DataFrame = {
-    val byCell = lut.repartition(col("chx"), col("chy"))
-    if (byCell.storageLevel == StorageLevel.NONE) byCell.persist()
-    byCell
-  }
+  private def lutByCell(lut: DataFrame): DataFrame =
+    graft.Core.persistLive(lut.repartition(col("chx"), col("chy")))
 
   /** Driver kernel stage: collected grid → outlier removal → smoothing →
     * validity clamp. Returns the final product grid.

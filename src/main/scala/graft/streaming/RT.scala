@@ -16,12 +16,13 @@ import org.apache.spark.sql.types.StructType
 object RT {
 
   /** The applied-batchId marker every foreachBatch loop in this file
-    * shares: read returns −1 when absent; write replaces atomically-enough
-    * for the single-writer streaming contract. One definition so the
+    * shares: read returns −1 when absent; write replaces it atomically
+    * (temp file, then rename), so a crash mid-write leaves the previous
+    * value readable and the loop restarts. One definition so the
     * at-least-once replay guard cannot drift between loops.
     */
-  private def readAppliedMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                marker: org.apache.hadoop.fs.Path): Long =
+  private[graft] def readAppliedMarker(fs: org.apache.hadoop.fs.FileSystem,
+                                       marker: org.apache.hadoop.fs.Path): Long =
     if (!fs.exists(marker)) -1L
     else {
       val in = fs.open(marker)
@@ -30,13 +31,24 @@ object RT {
       finally in.close()
     }
 
-  private def writeAppliedMarker(fs: org.apache.hadoop.fs.FileSystem,
+  private def writeAppliedMarker(spark: SparkSession,
                                  marker: org.apache.hadoop.fs.Path,
-                                 batchId: Long): Unit = {
-    val out = fs.create(marker, true)
-    try out.write(batchId.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+                                 batchId: Long): Unit =
+    writeAtomically(spark, marker)(_.write(batchId.toString
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+
+  /** Replace `file` through the session's checkpoint manager: `write`
+    * fills a temp file that is renamed over `file` only once it returns;
+    * a throw cancels the temp file and leaves `file` as it was.
+    */
+  private[graft] def writeAtomically(spark: SparkSession, file: org.apache.hadoop.fs.Path)
+                                    (write: java.io.OutputStream => Unit): Unit = {
+    val fm = org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+      .create(file.getParent, spark.sessionState.newHadoopConf())
+    fm.mkdirs(file.getParent)
+    val out = fm.createAtomic(file, overwriteIfPossible = true)
+    try write(out) catch { case e: Throwable => out.cancel(); throw e }
+    out.close()
   }
 
   /** The audit-log write every serve loop shares: rows land in a
@@ -149,7 +161,17 @@ object RT {
   def completenessStream(arrivals: Dataset[SourceArrival],
                          timeoutMs: Long): Dataset[SlotResult] = {
     import arrivals.sparkSession.implicits._
-    arrivals.toDF()
+    // one row per (slot, source, event time) and input partition reaches the
+    // state shuffle, however many gate rows a file holds. Exact duplicates
+    // only, so the watermark's max event time is unchanged, and slotUpdate
+    // reduces arrivals to a set anyway. Before withWatermark: a typed map
+    // after it drops the event-time column's watermark metadata.
+    arrivals
+      .mapPartitions { it =>
+        val seen = new java.util.HashSet[SourceArrival]()
+        it.filter(seen.add)
+      }
+      .toDF()
       .withColumn("eventTime", timestamp_millis(col("eventTimeMs")))
       .withWatermark("eventTime", "0 seconds")
       .as[SourceArrival]
@@ -327,7 +349,7 @@ object RT {
           Seq(idCol), "left_anti")
         graft.llm.DedupIndex.append(spark, indexPath, keptFresh, idCol,
           textCol)
-        writeAppliedMarker(fs, markerPath, batchId)
+        writeAppliedMarker(spark, markerPath, batchId)
       }
     }
 
@@ -380,7 +402,7 @@ object RT {
           graft.llm.Similarity.appendToIndex(spark, indexPath,
             freshAgainstIvf(spark, indexPath, kv, idCol), idCol, vecCol, dim)
         }
-        writeAppliedMarker(fs, markerPath, batchId)
+        writeAppliedMarker(spark, markerPath, batchId)
       }
     }
 
@@ -448,7 +470,7 @@ object RT {
           graft.llm.GraphAnnIndex.append(spark, indexPath, fresh, idCol,
             vecCol)
         }
-        writeAppliedMarker(fs, markerPath, batchId)
+        writeAppliedMarker(spark, markerPath, batchId)
       }
     }
 
@@ -541,7 +563,7 @@ object RT {
         graft.llm.Similarity.appendToIndex(spark, annIndexPath,
           freshAgainstIvf(spark, annIndexPath, kv, idCol), idCol, vecCol,
           dim)
-        writeAppliedMarker(fs, markerPath, batchId)
+        writeAppliedMarker(spark, markerPath, batchId)
       }
     }
 
@@ -651,7 +673,7 @@ object RT {
         graft.operators.Relational
           .maintainAgg(old, batch, keys, valCol, opCol)
           .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        writeAppliedMarker(fs, marker, batchId)
+        writeAppliedMarker(spark, marker, batchId)
         if (applied >= 0)
           fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/v$applied"), true)
       }
@@ -699,7 +721,7 @@ object RT {
             .groupBy(col("i"), col("j"))
             .agg(sum(col("gsum")).as("gsum"))
         merged.write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        writeAppliedMarker(fs, marker, batchId)
+        writeAppliedMarker(spark, marker, batchId)
         if (applied >= 0)
           fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/v$applied"), true)
       }
@@ -758,7 +780,7 @@ object RT {
             .groupBy(col("g"), col("rb"))
             .agg(sum(col("cnt")).as("cnt"))
         merged.write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        writeAppliedMarker(fs, marker, batchId)
+        writeAppliedMarker(spark, marker, batchId)
         if (applied >= 0)
           fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/v$applied"), true)
       }
@@ -828,7 +850,7 @@ object RT {
               col("q_bucket"))
           .drop("q_bucket")
           .write.mode("append").parquet(outPath)
-        writeAppliedMarker(fs, markerPath, batchId)
+        writeAppliedMarker(spark, markerPath, batchId)
       }
     }
 

@@ -206,6 +206,29 @@ class MlStreamGridSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("completeness: many rows of one file inside a batch still yield one emit with the same quality") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val input = MemoryStream[RT.SourceArrival]
+    val q = RT.completenessStream(input.toDS(), timeoutMs = 1000)
+      .writeStream.format("memory").queryName("slots5").outputMode("append").start()
+    try {
+      // every gate row of a landed file is an arrival: 40 copies per source
+      input.addData(Seq.fill(40)(RT.AllSources.map(s => RT.SourceArrival(1000L, s, 1000L))).flatten: _*)
+      q.processAllAvailable()
+      input.addData(Seq.fill(40)(Seq("A", "L", "W").map(s => RT.SourceArrival(5000L, s, 5000L))).flatten: _*)
+      q.processAllAvailable()
+      input.addData(Seq.fill(40)(RT.SourceArrival(900000L, "A", 900000L)): _*) // advance wm
+      q.processAllAvailable()
+      input.addData(RT.SourceArrival(905000L, "D", 905000L)) // fire timeouts
+      q.processAllAvailable()
+      val got = spark.table("slots5").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getBoolean(2))).sortBy(_._1).toSeq
+      // (the watermark-advancing slot times out degraded too)
+      assert(got.filter(_._1 < 900000L) == Seq((1000L, "ADLPW", true), (5000L, "A-L-W", false)))
+    } finally q.stop()
+  }
+
   test("pairWithPrevious: a late cross-batch row pairs with None and never regresses state") {
     import spark.implicits._
     implicit val sc = spark.sqlContext

@@ -56,4 +56,44 @@ class ReleaseBlocksSpec extends SparkSpec {
     assert(QpeFixtures.gridSha(again) == QpeFixtures.gridSha(first))
     assert(first.flatten.exists(v => !v.isNaN && v > 0))
   }
+  test("the first QPE slot after a block release persists the LUT's cell-partitioned copy again") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    import graft.qpe.Qpe
+    val sc = spark.sparkContext
+    val lut = QpeFixtures.lut(spark).cache()
+    def slot() = Qpe.kernelStage(
+      Qpe.gridStage(QpeFixtures.polar(spark, 0 until 5), lut, QpeFixtures.Cfg), QpeFixtures.Cfg)
+    def copyPersisted: Boolean = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(lut.repartition(col("chx"), col("chy"))
+        .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .exists(cd => sc.getPersistentRDDs.contains(cd.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id))
+    def jobsOf(body: => Unit): Int = {
+      def drain(): Unit = {
+        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      }
+      val jobs = new AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      drain()
+      sc.addSparkListener(listener)
+      try { body; drain() } finally sc.removeSparkListener(listener)
+      jobs.get
+    }
+    val first = slot()
+    assert(copyPersisted)
+    Core.releaseTransientBlocks(spark)
+    assert(!copyPersisted)
+    slot()
+    assert(copyPersisted, "the slot after a release must persist the copy again")
+    // a warm slot: gate broadcast and grid, no rebuild of the copy
+    var again: Array[Array[Double]] = null
+    assert(jobsOf { again = slot() } == 2)
+    assert(QpeFixtures.gridSha(again) == QpeFixtures.gridSha(first))
+    lut.unpersist()
+  }
 }

@@ -16,6 +16,7 @@ object TestSession {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.ui.enabled", "false")
+    .config(Core.CheckpointManagerConf._1, Core.CheckpointManagerConf._2)
     .getOrCreate()
 }
 
