@@ -1,264 +1,120 @@
 package graft
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import org.json4s._
 
+/** Times every declared query at `SPARK_GRAFT_SF_DIR` through [[Runner]]
+  * (full result into the `noop` sink) and prints ONE JSON line:
+  * `{"metric":"total","value":…,"unit":"sec","sf":…,"queries":"<csv>"}`.
+  * Field N of the CSV is the time of permanent id qN (BENCH_KEYS.json,
+  * append-only): 2 dp with trailing zeros stripped, empty for a retired or
+  * unselected id, -1 for a failed query. A full run also writes the
+  * lossless full-name 3 dp record to BENCH_full.json; a SPARK_GRAFT_ONLY
+  * dev subset never overwrites it.
+  */
 object Bench {
-  /** Deterministic short aliases for the stdout per-query map. The driver
-    * captures only the LAST ~2000 chars of the bench run's output, and the
-    * full-name queries map alone is ~2460 chars at 99 queries — full names
-    * can never fit at any float precision, which is why round 6's artifact
-    * carried only 60 timings. Scheme: the first `_`-segment (query id /
-    * family) abbreviated through a fixed family table, then the first w
-    * chars of each remaining segment, w growing per colliding group until
-    * globally unique. The full-name map is written to BENCH_full.json and
-    * the alias→name key is written to BENCH_KEYS.json on every run, so the
-    * stdout line is decodable without guessing.
-    */
-  /** Round 8: the family-abbreviation scheme (r7) averaged ~7 chars/alias
-    * and saturated the capture window at ~145 queries even on the 1 dp
-    * ladder step. Sequential aliases over the SORTED name list ("q0".."qN",
-    * ≤4 chars at any plausible query count) buy ~400 chars of headroom and
-    * stay deterministic for a fixed declared set; adding a query shifts
-    * every alias after it alphabetically, which is why readAnchor re-keys
-    * through BENCH_KEYS and warns on stale keys.
-    */
-  def aliases(names: Seq[String]): Map[String, String] =
-    names.sorted.zipWithIndex.map { case (n, i) => n -> s"q$i" }.toMap
+  val KeysFile = "BENCH_KEYS.json"
 
   def fmt3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  /** stdout-line precision: 2 dp keeps the alias-keyed line ~120 chars
-    * shorter than 3 dp at the current query count — headroom against the
-    * driver's ~2000-char tail capture. BENCH_full.json stays 3 dp (the
-    * lossless record anchors and verdicts read).
-    */
   def fmt2(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+      .reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
 
-  /** Time every selected query at `sfDir`. Noise control, two triggers for
-    * a median-of-3 re-run:
-    * (a) heavy tail: one cold/contended run mis-bills a multi-second query
-    *     by 2-3x (round 4: dedup_minhash billed 10.9 s in-suite vs 3.7 s
-    *     isolated — pure ordering/contention noise);
-    * (b) anchor drift: ANY query ≥1.5× off its committed anchor, so sub-2 s
-    *     phantoms (round 5's j2) get settled in-run instead of adjudicated
-    *     from a single noisy sample. Cheap stable queries stay single-run —
-    *     re-running all ~90 would triple wall clock (NOTES_r3 lesson 8).
+  /** Time each selected query. A median of three runs replaces the first
+    * when it is over 2 s (one cold or contended run mis-bills a multi-second
+    * query 2-3×) or ≥1.5× off its committed anchor in either direction (a
+    * single noisy sample must not read as a regression). Cheap stable
+    * queries stay single-run: re-running all of them triples the wall clock.
     */
-  def timeAll(spark: SparkSession, sfDir: String,
-              selected: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
+  def timeAll(spark: SparkSession, sfDir: String, selected: Seq[(String, Runner.Build)],
               anchor: Map[String, Double]): Map[String, Double] =
-    selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // a crashed query must record -1.0, not its time-to-failure: silently
-      // billing a fast crash as a fast run lets a broken query pass every
-      // downstream guard (Scaling's superlinearity ratio, anchor drift)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"WARN: query $name FAILED after " +
-            f"${(System.nanoTime() - t0) / 1e9}%.1f s: " +
-            s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-          -1.0
-        }
-      }
+    selected.map { case (name, fn) =>
+      def once(): Double = Runner.run(spark, name, fn(spark, sfDir), Runner.noop)
       val first = once()
       val drifted = anchor.get(name)
         .exists(a => a > 0 && first > 0 && (first >= a * 1.5 || first <= a / 1.5))
-      val t = if (first < 0) first
-      else if (first > 2.0 || drifted) {
-        val three = Seq(first, once(), once()).sorted
-        three(1)
-      } else first
-      // release the query's leaked checkpoint blocks OUTSIDE its timing
-      // (r14, VERDICT item 3): without this, 262 queries of localCheckpoint
-      // blocks accumulate in the block manager and late-session queries
-      // degrade under the memory pressure (r13 measured text_tfidf_topk
-      // 1.42 s isolated vs 4.84 s as 9th query). Session memos are
-      // protected (first consumer builds them inside its timed run, as
-      // before — only their release is skipped).
-      Core.releaseTransientBlocks(spark)
-      name -> t
+      name -> (if (first > 2.0 || drifted) Seq(first, once(), once()).sorted.apply(1) else first)
     }.toMap
 
-  /** Anchor times from the last committed local bench, parsed with a real
-    * JSON parser (json4s ships in the Spark jars): the old substring
-    * parser silently degraded to "no anchors" — disabling every
-    * drift-triggered re-run — on any format change. Accepts full names or
-    * aliases as keys. Loud when the file exists but yields nothing.
+  /** `known` (name → id, retired names included) plus every new name, in
+    * name order, at the next unused number. An id is never reused.
     */
-  def readAnchor(path: String, aliasOf: Map[String, String]): Map[String, Double] = {
-    val f = new java.io.File(path)
-    if (!f.exists()) return Map.empty
-    import org.json4s._
-    val m: Map[String, Double] = scala.util.Try {
-      val txt = scala.io.Source.fromFile(f).mkString
-      org.json4s.jackson.JsonMethods.parse(txt) \ "queries" match {
-        case JObject(fields) => fields.collect {
-          case (k, JDouble(v)) => k -> v
-          case (k, JInt(v)) => k -> v.toDouble
-          case (k, JDecimal(v)) => k -> v.toDouble
-        }.toMap
-        case _ => Map.empty[String, Double]
-      }
-    }.getOrElse(Map.empty)
-    // re-key alias-keyed anchors back to full names
-    val fromAlias = aliasOf.map(_.swap)
-    val full = m.map { case (k, v) => fromAlias.getOrElse(k, k) -> v }
-    if (full.isEmpty)
-      System.err.println(s"WARN: $path exists but no anchors parsed — " +
-        "drift-triggered re-runs are disabled; fix the file format")
-    // a key that is neither a declared query nor a current alias is a STALE
-    // alias (adding queries can widen a colliding group's abbreviation) —
-    // drift re-runs are silently off for those queries unless this is loud
-    val unresolved = full.keys.filterNot(aliasOf.contains).toSeq.sorted
-    if (unresolved.nonEmpty)
-      System.err.println(s"WARN: $path has ${unresolved.size} anchor keys matching no " +
-        s"declared query or alias (stale aliases? ${unresolved.take(5).mkString(", ")}…) — " +
-        "re-anchor from BENCH_full.json")
-    full
+  def assignIds(known: Map[String, Int], names: Seq[String]): Map[String, Int] =
+    names.filterNot(known.contains).distinct.sorted.foldLeft(known) { (ids, n) =>
+      ids + (n -> (ids.values.maxOption.getOrElse(-1) + 1))
+    }
+
+  def line(total: Double, sf: String, ids: Map[String, Int], times: Map[String, Double]): String = {
+    val byId = times.map { case (n, t) => ids(n) -> fmt2(t) }
+    val csv = (0 to ids.values.maxOption.getOrElse(-1)).map(byId.getOrElse(_, "")).mkString(",")
+    s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","sf":"$sf","queries":"$csv"}"""
   }
+
+  private def fields(path: String): List[(String, JValue)] =
+    org.json4s.jackson.JsonMethods.parse(Files.readString(Paths.get(path))) match {
+      case JObject(fs) => fs
+      case other => sys.error(s"$path: expected a JSON object, got ${other.getClass.getSimpleName}")
+    }
+
+  /** The id registry `{"qN":"name",…}`; unreadable is fatal, since
+    * restarting the numbering would silently re-key every query.
+    */
+  def readKeys(path: String): Map[String, Int] = {
+    val Id = "q(\\d+)".r
+    if (!Files.exists(Paths.get(path))) Map.empty
+    else fields(path).collect { case (Id(i), JString(n)) => n -> i.toInt }.toMap
+  }
+
+  /** Anchor times by full name from the last committed local bench. A file
+    * that yields none is fatal: it would silently turn every drift re-run off.
+    */
+  def readAnchor(path: String): Map[String, Double] =
+    if (!Files.exists(Paths.get(path))) Map.empty
+    else fields(path).collectFirst { case ("queries", JObject(qs)) =>
+      qs.collect { case (n, JDouble(t)) => n -> t }.toMap
+    }.filter(_.nonEmpty).getOrElse(sys.error(s"$path: no anchors parsed; fix or delete it"))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Core.harnessSession(cpus)
-    // warmup: JVM/codegen/scheduler startup must not bill the first query —
-    // touch each cold path the query classes share (scan+agg, partitioned
-    // window sort, broadcast join, explode+md5) on small slices. Best-effort:
-    // a dataset without one of these tables must degrade to a cold first
-    // query, not kill the run before any timing happens
+    val spark = Core.harnessSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    // warm-up: JVM, codegen and scheduler start-up must not bill the first
+    // query, so touch the cold paths the queries share (scan+agg, window
+    // sort, broadcast join, explode+md5, the noop write) on small slices.
+    // Best-effort: a dataset without one of these tables degrades to a cold
+    // first query instead of killing the run.
     scala.util.Try {
       import org.apache.spark.sql.functions._
+      import org.apache.spark.sql.expressions.Window
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      li.groupBy("l_returnflag").count().count()
+      Runner.noop(li.groupBy("l_returnflag").count())
       val liS = li.filter(col("l_orderkey") % 1000 === 0)
-      liS.withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("l_returnflag")).orderBy(col("l_orderkey"))))
-        .agg(max(col("rn"))).count()
-      liS.join(broadcast(liS.select(col("l_orderkey")).limit(100)), Seq("l_orderkey"))
-        .count()
-      spark.read.parquet(s"$sfDir/documents.parquet").limit(100)
+      Runner.noop(liS.withColumn("rn", row_number().over(
+        Window.partitionBy(col("l_returnflag")).orderBy(col("l_orderkey")))).agg(max(col("rn"))))
+      Runner.noop(liS.join(broadcast(liS.select(col("l_orderkey")).limit(100)), Seq("l_orderkey")))
+      Runner.noop(spark.read.parquet(s"$sfDir/documents.parquet").limit(100)
         .select(explode(split(lower(col("text")), "\\s+")).as("t"))
         .select(conv(substring(md5(col("t")), 1, 15), 16, 10).cast("long").as("h"))
-        .agg(min(col("h"))).count()
+        .agg(min(col("h"))))
     }
-    // dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the run to named queries
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(q => names(q._1))
-      case None => SparkEntry.queries
-    }
-    val aliasOf = aliases(SparkEntry.queries.keys.toSeq)
-    // anchor times from the last committed local bench (same harness, same
-    // sf): a single-run time that lands ≥1.5× away from its anchor in either
-    // direction is suspect noise, not a finding — round 5's verdict chased a
-    // j2 "regression" (0.51→1.02 s) on an implementation untouched since r2.
-    // Missing/new queries (or a missing file) simply have no anchor.
-    val anchor = readAnchor("BENCH_local.json", aliasOf)
-    val results = timeAll(spark, sfDir, selected, anchor)
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val sortedResults = results.toSeq.sortBy(_._1)
-    // side files with the lossless full-name record (cwd = repo root under
-    // sbt): BENCH_full.json for humans/tools, BENCH_KEYS.json to decode the
-    // stdout aliases. FULL runs only — a SPARK_GRAFT_ONLY dev run must not
-    // clobber the full-run record the re-anchor workflow copies from.
-    // Best-effort — a read-only cwd must not fail the bench.
-    // stdout line (driver-captured): alias-keyed, 3-decimal, queries last so
-    // any truncation cuts the header, not the timings. Must stay under the
-    // driver's ~2000-char tail window — warn loudly if it ever outgrows it.
-    // alias decode key: committed BENCH_KEYS.json (header field dropped at
-    // 136 queries — the ~1928-char driver tail capture would truncate the
-    // line's FRONT, destroying the JSON header, so every header byte
-    // matters more than self-description)
-    def lineAt(fmt: Double => String): String = {
-      val qs = sortedResults
-        .map { case (k, v) => s"\"${aliasOf(k)}\":${fmt(v)}" }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","sf":"${new java.io.File(sfDir).getName}","queries":$qs}"""
-    }
-    // precision ladder: plain 2 dp → 2 dp with trailing zeros stripped
-    // (LOSSLESS: "0.60"→"0.6", "1.00"→"1") → 1 dp as the last resort
-    def strip(s: String): String =
-      if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
-      else s
-    // round 8: even 1-dp stripped maps outgrew the window at ~200 queries
-    // (2284 chars at 212). The packed form keeps EVERY timing decodable
-    // at 2 dp in ~half the bytes: "packed" is a CSV of all timings in
-    // sorted-name order (= BENCH_KEYS alias index order, so q17's value
-    // is the 18th field), and the alias map keeps only the slowest 40
-    // for direct human reading. ~1650 chars at 212 queries, linear
-    // headroom to ~350.
-    def packedLine(): String = {
-      val packed = sortedResults.map { case (_, v) => strip(fmt2(v)) }
-        .mkString(",")
-      val heavy = sortedResults.sortBy(-_._2).take(40).sortBy(_._1)
-        .map { case (k, v) => s"\"${aliasOf(k)}\":${strip(fmt2(v))}" }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","sf":"${new java.io.File(sfDir).getName}","queries":$heavy,"packed":"$packed"}"""
-    }
-    val line2 = lineAt(fmt2)
-    val (line, usedPacked) = if (line2.length <= 1850) (line2, false) else {
-      // the stripped form may run to ~1900: the measured capture window is
-      // ~1928 chars (2000 tail − 72 sbt trailer, NOTES_r7), so accept it
-      // with a 28-char margin before surrendering resolution
-      val lt = lineAt(v => strip(fmt2(v)))
-      if (lt.length <= 1900) {
-        println(s"NOTE: bench line trailing-zero-stripped (plain 2 dp was ${line2.length} chars)")
-        (lt, false)
-      } else if (only.isEmpty) {
-        val lp = packedLine()
-        println(s"NOTE: bench line switched to packed encoding (2 dp map was ${line2.length} chars)")
-        (lp, true)
-      } else {
-        // a SPARK_GRAFT_ONLY subset must NEVER pack: the CSV's positions
-        // would be decoded against the FULL-set alias indices in the
-        // committed BENCH_KEYS.json and silently misalign every field
-        println(s"NOTE: oversized dev-subset line kept stripped (${lt.length} chars); packed is full-run-only")
-        (lt, false)
+    val selected = Runner.select(sys.env.getOrElse("SPARK_GRAFT_ONLY", ""))
+    val known = readKeys(KeysFile)
+    val ids = assignIds(known, SparkEntry.queries.keys.toSeq)
+    val results = timeAll(spark, sfDir, selected, readAnchor("BENCH_local.json"))
+    val total = results.values.sum
+    // side files (cwd = repo root under sbt), best-effort: a read-only cwd
+    // must not fail the bench
+    scala.util.Try {
+      if (ids != known) Files.writeString(Paths.get(KeysFile), ids.toSeq.sortBy(_._2)
+        .map { case (n, i) => s""""q$i":"$n"""" }.mkString("{", ",", "}\n"))
+      if (selected.size == SparkEntry.queries.size) {
+        val full = results.toSeq.sortBy(_._1).map { case (n, t) => s""""$n":${fmt3(t)}""" }
+        Files.writeString(Paths.get("BENCH_full.json"),
+          s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","sf":"$sfDir","queries":${full.mkString("{", ",", "}")}}""")
       }
     }
-    // side files with the lossless full-name record (cwd = repo root under
-    // sbt): BENCH_full.json for humans/tools, BENCH_KEYS.json to decode the
-    // stdout aliases. FULL runs only — a SPARK_GRAFT_ONLY dev run must not
-    // clobber the full-run record the re-anchor workflow copies from. The
-    // "_packed" decode note is written only when the stdout line actually
-    // used the packed encoding. Best-effort — a read-only cwd must not
-    // fail the bench.
-    if (only.isEmpty) scala.util.Try {
-      val fullJson = sortedResults
-        .map { case (k, v) => s"\"$k\":${fmt3(v)}" }.mkString("{", ",", "}")
-      val packedDoc =
-        if (usedPacked)
-          Seq("\"_packed\":\"stdout 'packed' is a CSV of all timings; qN = field N (0-based, sorted-name order)\"")
-        else Seq.empty
-      val keysJson = (aliasOf.toSeq.sortBy(_._1)
-        .map { case (full, a) => s"\"$a\":\"$full\"" } ++ packedDoc)
-        .mkString("{", ",", "}")
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_full.json"),
-        s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","sf":"$sfDir","queries":$fullJson}""".getBytes("UTF-8"))
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_KEYS.json"),
-        (keysJson + "\n").getBytes("UTF-8"))
-    }
-    if (line.length > 1900)
-      System.err.println(s"WARN: bench line ${line.length} chars — may exceed the driver tail window")
-    // Two JSON lines, a deliberate both-parser hedge (round 14, VERDICT item
-    // 2 — the driver has read per-query timings in NO round yet):
-    //  1. the COMPLETE full-name 3 dp map first — a parser that scans the
-    //     whole stdout picks up every declared query under its real name;
-    //  2. the compact (alias/packed) line LAST — a parser that only sees the
-    //     ~2000-char tail still finds one complete, decodable line inside
-    //     the window (full-name maps are ~6.5k chars and can never fit).
-    // Printed in this order so the tail window always ends with the line
-    // that fits it; the full line printing later would cut ITS OWN front
-    // off in the window and leave nothing parseable.
-    if (only.isEmpty) {
-      val fullJsonLine = sortedResults
-        .map { case (k, v) => s"\"$k\":${fmt3(v)}" }.mkString("{", ",", "}")
-      println(s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","sf":"${new java.io.File(sfDir).getName}","queries":$fullJsonLine}""")
-    }
-    println(line)
+    println(line(total, new java.io.File(sfDir).getName, ids, results))
     spark.stop()
   }
 }
