@@ -80,6 +80,46 @@ object Core {
       spark.read.parquet(paths: _*)
   }
 
+  /** The per-session store: every piece of session-scoped state, the
+    * table plans of [[table]] and the relations of [[memo]], in one map per
+    * SparkSession INSTANCE. Identity keys mean a sibling session with
+    * different partitioning (PartitionInvarianceSpec) never reads another
+    * session's entries. The inner map is held through a SoftReference: a
+    * stored Dataset strongly references its SparkSession (via
+    * QueryExecution), so a plain WeakHashMap value would resurrect the key
+    * and pin every session for the JVM lifetime. With the soft indirection
+    * an abandoned session is at most softly reachable from here, so the GC
+    * clears its entry under memory pressure (always before OOM), and the
+    * ContextCleaner then unpersists the collected memos' checkpoint blocks.
+    */
+  private val sessions = new java.util.WeakHashMap[
+    SparkSession, java.lang.ref.SoftReference[
+      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]]()
+
+  /** The stored entry `key` of `spark`, built on first use. The build runs
+    * outside any map operation, so a build may read other entries (a memo
+    * reads its tables); two racing first uses both build and the first
+    * stored entry wins.
+    */
+  private def stored(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
+    val perSession = sessions.synchronized {
+      val ref = sessions.get(spark)
+      val live = if (ref == null) null else ref.get()
+      if (live == null) {
+        val m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+        sessions.put(spark, new java.lang.ref.SoftReference(m))
+        m
+      } else live
+    }
+    val hit = perSession.get(key)
+    if (hit != null) hit
+    else {
+      val built = build
+      val prev = perSession.putIfAbsent(key, built)
+      if (prev == null) built else prev
+    }
+  }
+
   /** Load one testdata table from an sf directory.
     *
     * The `events` table carries nanosecond-precision parquet timestamps,
@@ -87,63 +127,28 @@ object Core {
     * (TIMESTAMP(NANOS) is otherwise unsupported, SPARK-40819); the resulting
     * long is converted back to a proper TimestampType here (the data is
     * µs-precision, so ns→µs is lossless).
-    */
-  /** Per-(session, path) memo of the resolved table PLAN — not data. Each
-    * `spark.read.parquet` re-lists the directory and re-reads footers for
-    * schema; at ~90 queries × 1-3 tables per benchmark run that fixed cost
-    * is seconds of driver time for byte-identical plans. DataFrames are
-    * immutable and session-bound, so reuse is safe; the key carries the
-    * session identity so a stopped session's plans are never resurrected.
     *
-    * Lifecycle note: the cached DataFrames strongly reference their
-    * SparkSession (Dataset → QueryExecution → SparkSession), so a
-    * WeakHashMap key alone would never be collected — entries are therefore
-    * cleared EXPLICITLY by an application-end listener installed on first
-    * use (and by [[invalidateTables]]); the weak key is only a second line
-    * of defense, not the cleanup mechanism.
+    * The resolved PLAN, not data, is kept in the session store: each
+    * `spark.read.parquet` re-lists the directory and re-reads footers for
+    * schema, seconds of driver time per benchmark run for byte-identical
+    * plans. The plan snapshots the file listing at first read, so a caller
+    * that rewrites a table directory mid-session reads it directly
+    * ([[readAny]]) to see the new files; a soft-cleared store re-lists them.
     */
-  private val tableMemo =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]
-
-  /** Sessions that already carry the cleanup listener — tracked SEPARATELY
-    * from the memo entries, because [[invalidateTables]] clears the memo but
-    * must NOT forget the registration: re-registering on the next read would
-    * stack a fresh listener (each strongly pinning the session on the
-    * context's listener bus) per invalidate-then-read cycle.
-    */
-  private val listenerRegistered = new java.util.WeakHashMap[SparkSession, java.lang.Boolean]
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // NOTE the memo snapshots the parquet file listing at first read — a
-    // caller that rewrites a table directory mid-session must call
-    // [[invalidateTables]] (or re-read directly) to see the new files.
-    val perSession = tableMemo.synchronized {
-      var m = tableMemo.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-        tableMemo.put(spark, m)
-      }
-      if (listenerRegistered.get(spark) == null) {
-        listenerRegistered.put(spark, java.lang.Boolean.TRUE)
-        // drop this session's plans when its context ends, so the memo never
-        // pins a stopped session's Catalyst state for the JVM lifetime
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              invalidateTables(spark)
-          })
-      }
-      m
-    }
-    perSession.computeIfAbsent(s"$dir/$name.parquet",
-      path => normalizeNanosTs(spark.read.parquet(path)))
+    val path = s"$dir/$name.parquet"
+    stored(spark, path)(normalizeNanosTs(spark.read.parquet(path)))
   }
 
-  /** Drop the memoized plans for a session (after rewriting table files). */
-  def invalidateTables(spark: SparkSession): Unit =
-    tableMemo.synchronized { tableMemo.remove(spark); () }
+  /** Session memo for a relation several queries rebuild identically (an
+    * in-memory analogue of a persisted shared index): built once per
+    * (session, dir, key), localCheckpoint-ed, read by every consumer.
+    * [[releaseTransientBlocks]] keeps its blocks: a released
+    * localCheckpoint is unrecomputable.
+    */
+  private[graft] def memo(spark: SparkSession, dir: String, key: String)
+                         (build: => DataFrame): DataFrame =
+    stored(spark, s"$dir|$key")(build.localCheckpoint())
 
   /** Parallelism floor for COMPUTE-HEAVY stages: a row group is the
     * indivisible scan unit, so a small table written as one row group
@@ -221,71 +226,37 @@ object Core {
     } else df
   }
 
-  /** RDD ids whose blocks must survive [[releaseTransientBlocks]] — the
-    * session memos ([[graft.queries.memoRel]] relations, shared by
-    * many queries). Keyed on the SparkContext instance (weakly, so a
-    * stopped context's id set is collectable); everything NOT registered
-    * here is a query-private materialization.
-    */
-  private val protectedRdds = new java.util.WeakHashMap[
-    org.apache.spark.SparkContext, scala.collection.mutable.Set[Int]]
-
-  /** Register `df`'s materialized backing RDDs (its LogicalRDD leaves — a
-    * localCheckpoint-ed DataFrame is exactly one) as protected, and return
-    * `df`. Called by memoRel on each memo it creates.
-    */
-  def protectRdds(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.LogicalRDD
-    val ids = df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }
-    protectedRdds.synchronized {
-      val sc = df.sparkSession.sparkContext
-      var set = protectedRdds.get(sc)
-      if (set == null) { set = scala.collection.mutable.Set.empty[Int]; protectedRdds.put(sc, set) }
-      set ++= ids
-    }
-    df
-  }
-
-  /** Release every persisted RDD except the protected memos (round 14,
-    * VERDICT item 3). localCheckpoint blocks otherwise accumulate in the
-    * block manager for the SESSION lifetime — 262 queries of leaked
-    * checkpoints measurably degrade late-session queries (r13:
+  /** Release every cached relation and persisted RDD except the session
+    * memos (round 14, VERDICT item 3). localCheckpoint blocks otherwise
+    * accumulate in the block manager for the SESSION lifetime — 262 queries
+    * of leaked checkpoints measurably degrade late-session queries (r13:
     * text_tfidf_topk 1.42 s isolated vs 4.84 s as 9th query of a session).
     * Called BETWEEN queries (Bench/Verify), never inside one: a released
     * localCheckpoint is unrecomputable (truncated lineage), so this is only
     * safe once the query that built it has fully consumed its result —
-    * which is exactly the between-queries point. Memos are registered via
-    * [[protectRdds]] and skipped; plain `.cache()`/`.persist()` RDDs keep
-    * their lineage and would merely recompute if somehow re-used.
+    * which is exactly the between-queries point.
+    *
+    * Context-wide: the CacheManager is shared by every session of the
+    * context, so its entries go first (an entry whose RDD is unpersisted
+    * behind its back stays listed, keeps reporting its storage level and
+    * is swapped into every equal plan, so `.cache()` never caches it again).
+    * The kept set is the LogicalRDD leaves of the memos stored for ANY
+    * session on this context, read from the store at release time.
     */
   def releaseTransientBlocks(spark: SparkSession): Unit = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.LogicalRDD
     val sc = spark.sparkContext
-    val keep: Set[Int] = protectedRdds.synchronized {
-      val s = protectedRdds.get(sc)
-      if (s == null) Set.empty else s.toSet
+    spark.catalog.clearCache()
+    val memos = sessions.synchronized {
+      sessions.asScala.toSeq.collect {
+        case (s, ref) if s.sparkContext eq sc => Option(ref.get()).toSeq.flatMap(_.values.asScala)
+      }.flatten
     }
+    val keep = memos.flatMap(_.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }).toSet
     sc.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!keep.contains(id)) rdd.unpersist(blocking = false)
     }
-  }
-
-  /** Persist `df` unless a live copy of its plan is cached. After
-    * [[releaseTransientBlocks]] a released copy is still listed by the
-    * CacheManager, and `storageLevel` still reports its level, but its RDD
-    * is no longer persisted, so every use recomputes it from lineage. Such a
-    * stale entry is dropped and the plan persisted again.
-    */
-  def persistLive(df: DataFrame): DataFrame = {
-    val cached = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-    val live = cached.exists(cd => df.sparkSession.sparkContext.getPersistentRDDs
-      .contains(cd.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id))
-    if (!live) {
-      if (cached.nonEmpty) df.unpersist(blocking = false)
-      df.persist()
-    }
-    df
   }
 
   /** Loud integral-id contract check shared by the Long-keyed operators

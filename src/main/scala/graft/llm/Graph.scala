@@ -53,7 +53,7 @@ object Graph {
                damping: Double = 0.85, k: Int = 20): DataFrame = {
     require(iters >= 1 && k > 0, s"textRank: bad shape iters=$iters k=$k")
     // fanOut AFTER the checkpoint — frozen-coalesced-layout rule, see
-    // [[labelPropagation]]
+    // [[undirectedEdges]]
     val edges = graft.Core.fanOut(cooccurrenceEdges(df, textCol)
       .withColumn("outw", sum(col("w")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
@@ -97,6 +97,27 @@ object Graph {
       .distinct()
   }
 
+  /** The undirected edge relation of the `a`–`b` pairs in `edges`:
+    * `a→b ∪ b→a` as (src, dst), distinct, localCheckpoint-ed, then
+    * respread by [[graft.Core.fanOut]] — the iterative family's shared
+    * input, consumed once per round.
+    *
+    * The frozen-coalesced-layout rule: respread AFTER the checkpoint, never
+    * before it. AQE coalesces the distinct's shuffle to ~one partition for
+    * a few-MB edge relation and the checkpoint FREEZES that layout; every
+    * round that joins a broadcast side against it would then run its |E|
+    * stage on one core. Only on the RDD-backed checkpoint does fanOut's
+    * partition probe see the TRUE materialized count; probed before it,
+    * fanOut sees the pre-AQE plan and never fires (r14's HITS bug). The
+    * respread is a few-MB lazy exchange per round, nothing at scale where
+    * the checkpoint already holds thousands of partitions.
+    */
+  private[graft] def undirectedEdges(edges: DataFrame): DataFrame =
+    graft.Core.fanOut(
+      edges.select(col("a").as("src"), col("b").as("dst"))
+        .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
+        .distinct().localCheckpoint())
+
   /** Synchronous label propagation (Raghavan et al. 2007) — community
     * detection in O(iters) relational rounds: every node starts as its own
     * label and each round adopts the most frequent label among its
@@ -113,20 +134,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, iters: Int = 3,
                        k: Int = 20): DataFrame = {
     require(iters >= 1 && k > 0, s"labelPropagation: bad iters=$iters k=$k")
-    // fanOut AFTER the checkpoint: AQE coalesces the distinct's shuffle
-    // to ~one partition for a few-MB edge relation and the checkpoint
-    // FREEZES that layout; every round's label join then broadcasts the
-    // small side, so the per-round |E| stage would run on one core (the
-    // triangle-count lesson, applied across the iterative graph family).
-    // The order matters — on the RDD-backed checkpoint fanOut's partition
-    // probe sees the TRUE materialized count (a pre-checkpoint probe sees
-    // the pre-AQE shuffle count and never fires); the respread itself is
-    // a few-MB lazy exchange each round, nothing at scale where the
-    // checkpoint already holds thousands of partitions.
-    val ed = graft.Core.fanOut(
-      edges.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
-        .distinct().localCheckpoint()) // consumed once per iteration
+    val ed = undirectedEdges(edges) // consumed once per iteration
     var lab = ed.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
     for (_ <- 1 to iters) {
@@ -297,13 +305,9 @@ object Graph {
   def bfsLayers(edges: DataFrame, seeds: DataFrame,
                 maxHops: Int = 3): DataFrame = {
     require(maxHops >= 1 && maxHops <= 8, s"bfsLayers: bad maxHops=$maxHops")
-    // fanOut AFTER the checkpoint — frozen-coalesced-layout rule, see
-    // [[labelPropagation]] (each round joins the broadcast frontier
-    // against ed, so ed's layout is the round's parallelism)
-    val ed = graft.Core.fanOut(
-      edges.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
-        .distinct().localCheckpoint()) // consumed once per round
+    // each round joins the broadcast frontier against ed, so ed's layout
+    // is the round's parallelism
+    val ed = undirectedEdges(edges) // consumed once per round
     val nodes = ed.select(col("src").as("node")).distinct().localCheckpoint()
     var dist = nodes.join(broadcast(seeds.select(col("node")).distinct()),
         Seq("node"))
@@ -342,7 +346,7 @@ object Graph {
     require(iters >= 1 && iters <= 6 && k > 0, s"hits: bad iters=$iters k=$k")
     val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(27,10)")
     // fanOut AFTER the checkpoint — frozen-coalesced-layout rule, see
-    // [[labelPropagation]] (profiled here: the half-iteration's |E| join
+    // [[undirectedEdges]] (profiled here: the half-iteration's |E| join
     // + agg ran as single-task 0.9 s stages against the broadcast scores).
     // Probed BEFORE the checkpoint the relation is a join of two tables,
     // so the optimizer-stats probe sees a join-size over-estimate and
@@ -395,13 +399,9 @@ object Graph {
   def kcorePeel(edges: DataFrame, k: Int = 3, rounds: Int = 3): DataFrame = {
     require(k >= 1 && rounds >= 1 && rounds <= 8,
       s"kcorePeel: bad k=$k rounds=$rounds")
-    // fanOut AFTER the checkpoint — frozen-coalesced-layout rule, see
-    // [[labelPropagation]]; the per-round re-checkpoints then materialize
-    // the spread layout, which the broadcast semi-joins preserve
-    var ed = graft.Core.fanOut(
-      edges.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
-        .distinct().localCheckpoint())
+    // the per-round re-checkpoints materialize the spread layout, which
+    // the broadcast semi-joins preserve
+    var ed = undirectedEdges(edges)
     val out = (1 to rounds).map { round =>
       val keep = ed.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src"))

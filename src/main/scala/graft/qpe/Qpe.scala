@@ -2,6 +2,7 @@ package graft.qpe
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Phys
 
@@ -62,13 +63,16 @@ object Qpe {
     * A LUT is static for a session: every later call builds the same plan,
     * which Spark's CacheManager resolves to the persisted copy, so the
     * repartition runs once and later slots read it without an exchange.
-    * A copy whose blocks `Core.releaseTransientBlocks` dropped is persisted
-    * again by the next slot. A LUT that changes under the same plan (files
-    * rewritten in place) is read from the stale copy until `lut.unpersist()`
-    * drops it.
+    * `Core.releaseTransientBlocks` drops the copy with its CacheManager
+    * entry, so the next slot persists it again. A LUT that changes under the
+    * same plan (files rewritten in place) is read from the stale copy until
+    * `lut.unpersist()` drops it.
     */
-  private def lutByCell(lut: DataFrame): DataFrame =
-    graft.Core.persistLive(lut.repartition(col("chx"), col("chy")))
+  private def lutByCell(lut: DataFrame): DataFrame = {
+    val byCell = lut.repartition(col("chx"), col("chy"))
+    if (byCell.storageLevel == StorageLevel.NONE) byCell.persist()
+    byCell
+  }
 
   /** Driver kernel stage: collected grid → outlier removal → smoothing →
     * validity clamp. Returns the final product grid.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Core
-import graft.llm.{Dedup, Similarity}
+import graft.llm.{Dedup, Graph, Similarity}
 
 /** Near-duplicate detection queries: exact and digest dedup, n-gram
   * Jaccard, MinHash/SimHash/embedding LSH, clustering and canonicalization,
@@ -21,7 +21,7 @@ object DedupQueries {
     * join builds once per session instead of three times.
     */
   private def jaccardPairsShared(s: SparkSession, dir: String): DataFrame =
-    memoRel(s, dir, "jaccard_pairs_n3_j05_df1000") {
+    Core.memo(s, dir, "jaccard_pairs_n3_j05_df1000") {
       graft.llm.Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
         n = 3, minJaccard = 0.5, maxDf = 1000)
     }
@@ -31,7 +31,7 @@ object DedupQueries {
     * sketch_minhash_error calibration.
     */
   private[queries] def minhashPairsShared(s: SparkSession, dir: String): DataFrame =
-    memoRel(s, dir, "minhash_pairs_n3_k16_r4_j05") {
+    Core.memo(s, dir, "minhash_pairs_n3_k16_r4_j05") {
       graft.llm.Dedup.minhashDedup(t(s, dir, "documents"), "doc_id", "text",
         n = 3, k = 16, r = 4, minJaccard = 0.5)
     }
@@ -493,13 +493,8 @@ object DedupQueries {
             abs(length(col("na")) - length(col("nb"))) <= maxDist &&
             levenshtein(col("na"), col("nb")) <= maxDist)
           .select(col("a"), col("b"))
-        // fanOut AFTER the checkpoint (frozen-coalesced-layout
-        // rule — each min-label round joins broadcast labels against ed,
-        // and only the RDD-backed probe sees the true partition count)
-        val ed = Core.fanOut(
-          pairs.select(col("a").as("src"), col("b").as("dst"))
-            .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-            .distinct().localCheckpoint())
+        // each min-label round joins broadcast labels against ed
+        val ed = Graph.undirectedEdges(pairs)
         var lab = ed.select(col("src").as("node")).distinct()
           .withColumn("label", col("node"))
         for (_ <- 1 to rounds) {

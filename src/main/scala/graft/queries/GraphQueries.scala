@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Core
+
 /** Graph queries over the co-purchase item graph (triangles, BFS, k-core,
   * label propagation, HITS, assortativity, Jaccard, item-CF, association
   * rules) and the TextRank word graph. The basket and pair relations are
@@ -17,7 +19,7 @@ object GraphQueries {
     * and assoc_rules' item marginals.
     */
   private def basketItems(s: SparkSession, dir: String): DataFrame =
-    memoRel(s, dir, "basket_items") {
+    Core.memo(s, dir, "basket_items") {
       t(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("item"))
         .distinct()
@@ -27,12 +29,12 @@ object GraphQueries {
     * basket, with the shared-basket count) — the common input of SEVEN
     * graph queries (triangle count, BFS, k-core, label propagation,
     * assortativity, item-Jaccard, item-CF recommender). Built + shuffled
-    * ONCE per session via [[memoRel]]; each consumer applies its own
+    * ONCE per session via [[graft.Core.memo]]; each consumer applies its own
     * support filter / projection. In the bench this removes six rebuilds
     * of the basket self-join (the graph family's shared dominant cost).
     */
   private def coPurchasePairs(s: SparkSession, dir: String): DataFrame =
-    memoRel(s, dir, "copurchase_pairs") {
+    Core.memo(s, dir, "copurchase_pairs") {
       val bk = basketItems(s, dir)
       bk.select(col("ok"), col("item").as("a"))
         .join(bk.select(col("ok"), col("item").as("b")), Seq("ok"))

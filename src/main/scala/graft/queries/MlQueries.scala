@@ -1051,7 +1051,7 @@ object MlQueries {
     * pattern; the Gram pass is both queries' only corpus-touching stage).
     */
   private def gramShared(s: SparkSession, dir: String): DataFrame =
-    memoRel(s, dir, s"pca_gram_$pcaDim") {
+    Core.memo(s, dir, s"pca_gram_$pcaDim") {
       Pca.gram(t(s, dir, "embeddings"), "embedding", pcaDim)
     }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Core
 import graft.llm.{GraphAnn, Similarity, TextAnalysis}
 
 /** Similarity-search queries: brute-force and aggregated top-k, IVF, PQ
@@ -749,10 +750,10 @@ object SimsearchQueries {
   /** The fixed-seed cell assignment + m=4 navigable edge list the graph-ANN
     * family shares (simsearch_graph_beam's single-layer search and
     * simsearch_hnsw's layer 0 are the SAME relation) — built + shuffled once
-    * per session via [[memoRel]], the co-purchase/Gram precedent.
+    * per session via [[graft.Core.memo]], the co-purchase/Gram precedent.
     */
   private def nswCellsShared(s: SparkSession, dir: String): DataFrame =
-    memoRel(s, dir, "nsw_cells_seed8") {
+    Core.memo(s, dir, "nsw_cells_seed8") {
       val emb = t(s, dir, "embeddings")
       val seeds = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cell"), col("embedding").as("cv"))
@@ -783,20 +784,14 @@ object SimsearchQueries {
     */
   private val NswMaxLevel = 2
 
-  private def nswEdgesLayeredShared(s: SparkSession,
-                                             dir: String): DataFrame = {
-    // resolve the cells memo BEFORE entering the edges memo closure:
-    // computeIfAbsent nested inside computeIfAbsent on the same map is a
-    // documented ConcurrentHashMap recursive-update hazard
-    val cells = nswCellsShared(s, dir)
-    memoRel(s, dir, "nsw_edges_layered_m4_L2") {
+  private def nswEdgesLayeredShared(s: SparkSession, dir: String): DataFrame =
+    Core.memo(s, dir, "nsw_edges_layered_m4_L2") {
       graft.llm.GraphAnn.nswEdgesLayered(
-        cells.withColumn("lvl",
+        nswCellsShared(s, dir).withColumn("lvl",
           graft.llm.GraphAnn.hnswLevelCol(col("vec_id"), NswMaxLevel)),
         "vec_id", "embedding", "ivf_cell", "lvl", dim = 64, m = 4,
         minLevel = 0, maxLevel = NswMaxLevel)
     }
-  }
 
   private def nswEdgesShared(s: SparkSession, dir: String): DataFrame =
     nswEdgesLayeredShared(s, dir).filter(col("lvl") === 0)

@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Pins the between-queries checkpoint release (round 14, VERDICT item 3):
-  * query-private localCheckpoint blocks are dropped, memo-protected blocks
-  * survive AND stay readable — a released localCheckpoint would be
+  * query-private localCheckpoint blocks and cache entries are dropped, the
+  * memos of every session on the context survive AND stay readable — a
+  * released localCheckpoint would be
   * unrecomputable, so protection is correctness, not just performance.
   */
 class ReleaseBlocksSpec extends SparkSpec {
@@ -13,9 +16,10 @@ class ReleaseBlocksSpec extends SparkSpec {
     val sc = spark.sparkContext
     // query-private checkpoint: must be released
     val transientDf = df("v INT", (1 to 100).map(R(_))).localCheckpoint()
-    // memo-like checkpoint: protected, must survive and stay readable
-    val memoDf = Core.protectRdds(
-      df("v INT", (1 to 50).map(R(_))).localCheckpoint())
+    // session memo: protected, must survive and stay readable
+    val memoDf = Core.memo(spark, "ReleaseBlocksSpec", "v_1_50") {
+      df("v INT", (1 to 50).map(R(_)))
+    }
     assert(transientDf.count() == 100)
     assert(memoDf.count() == 50)
 
@@ -31,6 +35,41 @@ class ReleaseBlocksSpec extends SparkSpec {
     assert(memoDf.agg(sum(col("v"))).collect().head.getLong(0) == 1275L)
     // and a fresh plan over the memo (the consumer pattern) also works
     assert(memoDf.filter(col("v") <= 10).count() == 10)
+  }
+
+  test("a released persist() drops its cache entry, so persist() and a read cache it again") {
+    val sc = spark.sparkContext
+    val rel = df("v INT", (1 to 30).map(R(_))).persist()
+    assert(rel.count() == 30)
+    assert(rel.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    Core.releaseTransientBlocks(spark)
+    assert(rel.storageLevel == StorageLevel.NONE)
+    rel.persist()
+    assert(rel.count() == 30)
+    assert(rel.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    val buffers = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(rel.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .get.cachedRepresentation.cacheBuilder.cachedColumnBuffers
+    assert(sc.getRDDStorageInfo.exists(i => i.id == buffers.id && i.numCachedPartitions > 0),
+      "the second persist() must cache the relation's blocks")
+    rel.unpersist()
+  }
+
+  test("a memo of a sibling session survives a release called from the main session") {
+    val sc = spark.sparkContext
+    val sibling = spark.newSession()
+    val memoDf = Core.memo(sibling, "ReleaseBlocksSpec", "v_1_40") {
+      sibling.range(1, 41).toDF("v")
+    }
+    val memoIds = memoDf.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }
+    assert(memoIds.nonEmpty && memoIds.forall(sc.getPersistentRDDs.contains))
+    Core.releaseTransientBlocks(spark)
+    assert(memoIds.forall(sc.getPersistentRDDs.contains),
+      s"sibling memo released: ${sc.getPersistentRDDs.keySet}")
+    assert(memoDf.agg(sum(col("v"))).collect().head.getLong(0) == 820L)
+    // later consumers read the stored relation, not a rebuild
+    assert(Core.memo(sibling, "ReleaseBlocksSpec", "v_1_40")(fail("memo rebuilt")) eq memoDf)
   }
 
   test("release between builds leaves a later query's fresh checkpoint usable") {
