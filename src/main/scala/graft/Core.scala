@@ -25,6 +25,15 @@ object Core {
     "spark.sql.streaming.checkpointFileManagerClass" ->
       classOf[graft.streaming.LocalFsCheckpointFileManager].getName
 
+  /** [[graft.plans.GraftExtensions]] in every graft session, the test session
+    * included: the `UT(` parser, the native SQL functions, the
+    * unix_timestamp pushdown rule, the as-of join strategy and the table
+    * functions. A fixed setting, like [[CheckpointManagerConf]]; a sibling
+    * session (`newSession()`) inherits it.
+    */
+  val ExtensionsConf: (String, String) =
+    "spark.sql.extensions" -> classOf[graft.plans.GraftExtensions].getName
+
   /** Session with the reference's confs (database.py:18-24): 100 MB broadcast
     * threshold, case-sensitive resolution, plus scale-oriented defaults (AQE on,
     * shuffle partitions sized for local[32]; on a real cluster these are
@@ -44,6 +53,7 @@ object Core {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config(CheckpointManagerConf._1, CheckpointManagerConf._2)
+      .config(ExtensionsConf._1, ExtensionsConf._2)
 
   def session(appName: String = "graft", master: String = "local[*]"): SparkSession =
     withGraftConfs(SparkSession.builder().master(master).appName(appName), "32")

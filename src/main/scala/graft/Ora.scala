@@ -1,29 +1,50 @@
-package graft.queries
+package graft
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 
-/** Shared Spark-side/oracle-side expression pairs for the declared queries.
-  * Every helper exists in BOTH forms because the driver's compare is an
-  * exact cross-engine hash: the Spark expression and the DuckDB SQL must
+/** The exact-sum vocabulary and the shared Spark-side/oracle-side expression
+  * pairs. Every helper exists in BOTH forms because the driver's compare is
+  * an exact cross-engine hash: the Spark expression and the DuckDB SQL must
   * perform the identical arithmetic in the identical order. One definition
-  * here instead of a copy per query file — a change to the decimal scale,
-  * hash width, or token regex now lands everywhere or nowhere.
+  * here instead of a copy per file — a change to the decimal scale, hash
+  * width, or token regex now lands everywhere or nowhere.
+  *
+  * A double sum is accumulated as DECIMAL(27,10) ([[dec]]), a weighted term
+  * as DECIMAL(32,14) ([[dec14]]): decimal addition is associative, so the
+  * result does not depend on partitioning or row order. Every Spark-side
+  * exact sum in graft goes through these helpers, so a faster accumulator
+  * replaces their bodies and nothing else.
   */
-private[queries] object Ora {
+private[graft] object Ora {
+
+  /** The exact accumulator type of a double sum. */
+  def dec(c: Column): Column = c.cast("decimal(27,10)")
+
+  /** The exact accumulator type of a weighted (product) term: a product
+    * of two 6-decimal values needs 12 decimals, which a 10-decimal
+    * accumulator would round.
+    */
+  def dec14(c: Column): Column = c.cast("decimal(32,14)")
 
   /** Order-independent double sum: accumulate in DECIMAL(27,10), then cast. */
-  def dsum(c: Column): Column = sum(c.cast("decimal(27,10)")).cast("double")
+  def dsum(c: Column): Column = sum(dec(c)).cast("double")
   def dsumSql(expr: String): String =
     s"CAST(SUM(CAST(($expr) AS DECIMAL(27,10))) AS DOUBLE)"
+
+  /** [[dsum]] of weighted (product) terms, accumulated in [[dec14]]. */
+  def dsum14(c: Column): Column = sum(dec14(c)).cast("double")
+
+  /** [[dsum]] over a window frame. */
+  def dsumOver(c: Column, w: WindowSpec): Column = sum(dec(c)).over(w).cast("double")
 
   /** Pure-sum output columns: round in DECIMAL space, THEN cast to double.
     * Rounding the already-cast double at 6 dp is 1-ULP ambiguous across
     * engines once the sum exceeds ~2^33 (observed at sf0.1); rounding the
     * exact decimal makes both engines convert the identical decimal.
     */
-  def dsum6(c: Column): Column =
-    round(sum(c.cast("decimal(27,10)")), 6).cast("double")
+  def dsum6(c: Column): Column = round(sum(dec(c)), 6).cast("double")
   def dsum6Sql(expr: String): String =
     s"CAST(ROUND(SUM(CAST(($expr) AS DECIMAL(27,10))), 6) AS DOUBLE)"
 
@@ -33,8 +54,7 @@ private[queries] object Ora {
     * sit at ~6e9 at sf0.1 and scale linearly, so the 6-dp form would
     * enter the probabilistic cast-divergence regime within one 10×.
     */
-  def dsum2(c: Column): Column =
-    round(sum(c.cast("decimal(27,10)")), 2).cast("double")
+  def dsum2(c: Column): Column = round(sum(dec(c)), 2).cast("double")
   def dsum2Sql(expr: String): String =
     s"CAST(ROUND(SUM(CAST(($expr) AS DECIMAL(27,10))), 2) AS DOUBLE)"
 

@@ -37,16 +37,17 @@ object Runner {
     }
   }
 
-  /** The declared queries named in the comma-separated `filter`, in name
-    * order. A blank filter selects all of them (a quoted-but-unset shell
-    * variable must not select zero queries); an unknown name fails loudly.
+  /** The declared queries named in the comma-separated `filter`, in the
+    * filter's order (a repeated name keeps its first place), so a caller
+    * can run them in any order. A blank filter selects all of them in name
+    * order (a quoted-but-unset shell variable must not select zero
+    * queries); an unknown name fails loudly.
     */
   def select(filter: String): Seq[(String, Build)] = {
-    val names = filter.split(',').map(_.trim).filter(_.nonEmpty).toSet
-    val unknown = names -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query names in filter: ${unknown.toSeq.sorted.mkString(",")}")
-    SparkEntry.queries.toSeq
-      .filter { case (n, _) => names.isEmpty || names(n) }
-      .sortBy(_._1)
+    val all = SparkEntry.queries
+    val names = filter.split(',').map(_.trim).filter(_.nonEmpty).distinct.toSeq
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query names in filter: ${unknown.sorted.mkString(",")}")
+    if (names.isEmpty) all.toSeq.sortBy(_._1) else names.map(n => n -> all(n))
   }
 }

@@ -9,14 +9,31 @@ object Verify {
     * [[Core.writeResult]] and return the names that failed. A previous run's
     * output is deleted first: a query whose build throws never reaches its
     * write, and a stale result left on disk would pass the compare.
+    * `$outDir/plans.txt` gets each written query's optimized logical plan,
+    * in name order, with the names a run assigns blanked ([[perRun]]): two
+    * builds' files diff to nothing when every plan is the same.
     */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
-           queries: Seq[(String, Runner.Build)]): Seq[String] =
-    queries.filter { case (name, fn) =>
+           queries: Seq[(String, Runner.Build)]): Seq[String] = {
+    val plans = scala.collection.mutable.TreeMap.empty[String, String]
+    val failed = queries.filter { case (name, fn) =>
       val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
       out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
-      Runner.run(spark, name, fn(spark, sfDir), Core.writeResult(_, out.toString)) < 0
+      Runner.run(spark, name, fn(spark, sfDir), df => {
+        plans(name) = perRun.foldLeft(df.queryExecution.optimizedPlan.toString) {
+          case (plan, (pattern, blank)) => plan.replaceAll(pattern, blank)
+        }
+        Core.writeResult(df, out.toString)
+      }) < 0
     }.map(_._1)
+    Files.writeString(Paths.get(s"$outDir/plans.txt"),
+      plans.map { case (name, plan) => s"== $name\n$plan\n" }.mkString)
+    failed
+  }
+
+  /** Expression ids, object hashes, exchange plan ids and JVM lambda class names. */
+  private val perRun = Seq("#\\d+" -> "#", "@[0-9a-f]+" -> "@",
+    "plan_id=\\d+" -> "plan_id=", "Lambda\\$\\d+/0x[0-9a-f]+" -> "Lambda")
 
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query-name filter (dev loop)]

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Ora.{dec, dsum}
+
 /** Deterministic trainable text classifiers for the curation pipeline.
   *
   * The fastText-style supervised quality/language classifier of the
@@ -38,7 +40,6 @@ object Classify {
     */
   def nbTrainScore(df: DataFrame, idCol: String, textCol: String,
                    labelCol: String, isTrain: Column): DataFrame = {
-    val dec = "decimal(27,10)"
     val base = graft.Core.fanOut(df).select(col(idCol), col(labelCol).as("label"),
       isTrain.as("is_train"), TextAnalysis.tokens(col(textCol)).as("toks"))
     val train = base.filter(col("is_train"))
@@ -72,7 +73,7 @@ object Classify {
         log10((col("cnt") + 1).cast("double") /
               (col("ct") + col("v")).cast("double")).as("lp"))
     val perDocClass = pairs.groupBy(col(idCol), col("label"))
-      .agg(sum(col("lp").cast(dec)).as("sdec"), count(lit(1)).as("n_used"))
+      .agg(sum(dec(col("lp"))).as("sdec"), count(lit(1)).as("n_used"))
 
     val prior = cls.crossJoin(broadcast(tot)).select(col("label"),
       log10(col("nd").cast("double") / col("td").cast("double")).as("pr"))
@@ -81,7 +82,7 @@ object Classify {
     val scored = scoreDocs.crossJoin(broadcast(prior))
       .join(perDocClass, Seq(idCol, "label"), "left")
       .select(col(idCol), col(labelCol), col("label"),
-        (coalesce(col("sdec"), lit(0).cast(dec)) + col("pr").cast(dec)).as("score_dec"),
+        (coalesce(col("sdec"), dec(lit(0))) + dec(col("pr"))).as("score_dec"),
         coalesce(col("n_used"), lit(0L)).as("n_used"))
     scored.groupBy(col(idCol)).agg(
         min(struct((-col("score_dec")).as("ns"), col("label").as("lb"))).as("b"),
@@ -109,7 +110,6 @@ object Classify {
     */
   def gaussianNbConfusion(df: DataFrame, idCol: String, labelCol: String,
                           valCol: String, isTrain: Column): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(27,10)")
     val v = col(valCol).cast("double")
     val base = df.select(col(idCol), col(labelCol).as("label"), v.as("v"),
         isTrain.as("is_train"))
@@ -117,8 +117,7 @@ object Classify {
     val train = base.filter(col("is_train"))
     val model = train.groupBy(col("label"))
       .agg(count(lit(1)).as("n"),
-        sum(dec(col("v"))).cast("double").as("sv"),
-        sum(dec(col("v") * col("v"))).cast("double").as("svv"),
+        dsum(col("v")).as("sv"), dsum(col("v") * col("v")).as("svv"),
         min(col("v")).as("mn"), max(col("v")).as("mx"))
     val tot = train.agg(count(lit(1)).as("td"))
     val params = model.crossJoin(broadcast(tot)).select(

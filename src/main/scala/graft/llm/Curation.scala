@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Ora.dsum
+
 /** Corpus-curation operators for training-data pipelines: benchmark
   * decontamination, deterministic sampling, and PII redaction — the
   * curation steps that sit between dedup and tokenization in a 100 TB
@@ -270,7 +272,7 @@ object Curation {
       .withColumn("p", col("n_docs").cast("double") / col("__tot"))
       .withColumn("__pw", pow(col("p"), lit(alpha)))
     val ws = smoothed.agg(
-      sum(col("__pw").cast("decimal(27,10)")).cast("double").as("__ws"))
+      dsum(col("__pw")).as("__ws"))
     smoothed.crossJoin(broadcast(ws))
       .select(col(srcCol), col("n_docs"),
         round(col("p"), 6).as("p"),
@@ -462,8 +464,7 @@ object Curation {
       .join(broadcast(w), Seq("b"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_feats"),
-        round(sum(col("lw").cast("decimal(27,10)")).cast("double"), 6)
-          .as("weight"))
+        round(dsum(col("lw")), 6).as("weight"))
     corpus.select(col(idCol))
       .join(perDoc, Seq(idCol), "left")
       .na.fill(0L, Seq("n_feats"))

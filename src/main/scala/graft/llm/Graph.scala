@@ -3,14 +3,14 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Ora.dsum
+
 /** Corpus graph analytics: TextRank (Mihalcea & Tarau 2004) keyword
   * scoring — weighted PageRank over the adjacent-token co-occurrence
   * graph, the classic iterative-graph workload expressed as k unrolled
   * relational steps.
   */
 object Graph {
-
-  private val Dec = "decimal(27,10)"
 
   /** Build the undirected weighted co-occurrence edge relation from
     * adjacent tokens: one map-side pass (adjacent array slots — the
@@ -67,7 +67,7 @@ object Graph {
           round(col("rank_v") * (col("w").cast("double") / col("outw").cast("double")), 10)
             .as("c"))
         .groupBy(col("tok"))
-        .agg(sum(col("c").cast(Dec)).cast("double").as("s"))
+        .agg(dsum(col("c")).as("s"))
       r = nodes.join(contrib, Seq("tok"), "left")
         .select(col("tok"),
           round(lit(1.0 - damping) +
@@ -344,7 +344,6 @@ object Graph {
     */
   def hits(edges: DataFrame, iters: Int = 2, k: Int = 20): DataFrame = {
     require(iters >= 1 && iters <= 6 && k > 0, s"hits: bad iters=$iters k=$k")
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(27,10)")
     // fanOut AFTER the checkpoint — frozen-coalesced-layout rule, see
     // [[undirectedEdges]] (profiled here: the half-iteration's |E| join
     // + agg ran as single-task 0.9 s stages against the broadcast scores).
@@ -364,7 +363,7 @@ object Graph {
       // by this checkpoint — the raw relation is |nodes|-bounded, cheap to
       // hold, and the normalized relation is then a trivial projection)
       val aRaw = ed.join(hub, Seq("u"))
-        .groupBy(col("i")).agg(sum(dec(col("h"))).cast("double").as("ar"))
+        .groupBy(col("i")).agg(dsum(col("h")).as("ar"))
         .localCheckpoint()
       val aMax = aRaw.agg(max(col("ar")).as("am"))
       auth = aRaw.crossJoin(broadcast(aMax))
@@ -375,7 +374,7 @@ object Graph {
       // iteration (an |E| join + agg + checkpoint) would be dead work
       if (it < iters) {
         val hRaw = ed.join(auth, Seq("i"))
-          .groupBy(col("u")).agg(sum(dec(col("a"))).cast("double").as("hr"))
+          .groupBy(col("u")).agg(dsum(col("a")).as("hr"))
           .localCheckpoint()
         val hMax = hRaw.agg(max(col("hr")).as("hm"))
         hub = hRaw.crossJoin(broadcast(hMax))

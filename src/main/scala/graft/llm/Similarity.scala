@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Ora.{dec, dsum}
+
 /** Approximate-nearest-neighbor similarity search over an embedding column
   * (`Array[Float]`). Brute-force cosine top-k as the exactness baseline; an
   * IVF-style coarse-quantized variant as the scale path (probe a subset of
@@ -395,8 +397,7 @@ object Similarity {
           element_at(col("codes"), (col("pos") / sub).cast("int") + 1).as("c"),
           col("x").cast("double").as("x"))
         .groupBy(col("c"), col("pos"))
-        .agg((sum(col("x").cast("decimal(27,10)")).cast("double") /
-          count(lit(1))).as("mean"))
+        .agg((dsum(col("x")) / count(lit(1))).as("mean"))
         .collect()
       val next = cw.map(_.clone())
       means.foreach { r =>
@@ -458,8 +459,7 @@ object Similarity {
     */
   private def pqRank(pairs: DataFrame, m: Int, k: Int): DataFrame = {
     val distDec = (0 until m).map(j =>
-        element_at(element_at(col("lut"), j + 1), element_at(col("codes"), j + 1))
-          .cast("decimal(27,10)"))
+        dec(element_at(element_at(col("lut"), j + 1), element_at(col("codes"), j + 1))))
       .reduceLeft(_ + _)
     val topk = udaf(new graft.functions.Aggregators.TopK(k))
     pairs.withColumn("dist", round(distDec, 6).cast("double"))
@@ -712,8 +712,7 @@ object Similarity {
   def cellCentroids(corpus: DataFrame, partCol: String, vecCol: String): DataFrame = {
     val expl = corpus.select(col(partCol), posexplode(col(vecCol)).as(Seq("pos", "v")))
     expl.groupBy(col(partCol), col("pos"))
-      .agg((sum(col("v").cast("double").cast("decimal(27,10)")).cast("double") /
-        count(lit(1))).as("cv"))
+      .agg((dsum(col("v").cast("double")) / count(lit(1))).as("cv"))
       .groupBy(col(partCol))
       .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("s"))
       .select(col(partCol).cast("long").as(partCol),

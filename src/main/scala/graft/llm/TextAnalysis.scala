@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Ora.{dec, dsum}
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, quality scoring, language identification, document
   * fingerprinting. All pure column expressions / single-shuffle aggregations —
@@ -314,8 +316,7 @@ object TextAnalysis {
         (-log10(col("cnt").cast("double") / col("tot").cast("double"))).as("s"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tok"),
-           round(sum(col("s").cast("decimal(27,10)")).cast("double") /
-             count(lit(1)), 6).as("surprisal"))
+           round(dsum(col("s")) / count(lit(1)), 6).as("surprisal"))
     df.select(col(idCol)).join(perDoc, Seq(idCol), "left")
       .na.fill(0L, Seq("n_tok"))
   }
@@ -373,8 +374,7 @@ object TextAnalysis {
                 (coalesce(col("cw"), lit(0L)) + col("v")).cast("double"))).as("s"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_bigrams"),
-           round(sum(col("s").cast("decimal(27,10)")).cast("double") /
-             count(lit(1)), 6).as("neg_logp10"))
+           round(dsum(col("s")) / count(lit(1)), 6).as("neg_logp10"))
     df.select(col(idCol)).join(perDoc, Seq(idCol), "left")
       .na.fill(0L, Seq("n_bigrams"))
       .withColumn("ppl", round(pow(lit(10.0), col("neg_logp10")), 6))
@@ -493,11 +493,10 @@ object TextAnalysis {
       .crossJoin(broadcast(nTot))
     val p = col("a").cast("double") / col("ct").cast("double")
     val q = col("tt").cast("double") / col("nn").cast("double")
-    val dec = (c: Column) => c.cast("decimal(27,10)")
     j.groupBy(col("class"))
       .agg(count(lit(1)).as("vocab"), first(col("ct")).as("n_tokens"),
-        round(sum(dec(-p * log(p))).cast("double"), 6).as("entropy_nats"),
-        round(sum(dec(p * log(p / q))).cast("double"), 6).as("kl_vs_corpus"))
+        round(dsum(-p * log(p)), 6).as("entropy_nats"),
+        round(dsum(p * log(p / q)), 6).as("kl_vs_corpus"))
   }
 
   /** Interpolated Kneser-Ney bigram perplexity (Kneser & Ney 1995, the
@@ -552,8 +551,7 @@ object TextAnalysis {
     val perDoc = scored.groupBy(col(idCol))
       .agg(count(lit(1)).as("n_bigrams"),
         sum(when(col("__p") > 0, 1L).otherwise(0L)).as("n_scored"),
-        round(sum(when(col("__p") > 0, (-log10(col("__p"))).cast("decimal(27,10)")))
-            .cast("double") /
+        round(sum(when(col("__p") > 0, dec(-log10(col("__p"))))).cast("double") /
           sum(when(col("__p") > 0, 1L).otherwise(0L)), 6).as("neg_logp10"))
     df.filter(!isTrain).select(col(idCol)).join(perDoc, Seq(idCol), "left")
       .na.fill(0L, Seq("n_bigrams", "n_scored"))
@@ -604,12 +602,9 @@ object TextAnalysis {
       .filter(col("rank") <= topN)
       .select(log(col("rank").cast("double")).as("x"),
         log(col("cnt").cast("double")).as("y"))
-    val dec = (c: Column) => c.cast("decimal(27,10)")
     val m = ranked.agg(count(lit(1)).as("n"),
-      sum(dec(col("x"))).cast("double").as("sx"),
-      sum(dec(col("y"))).cast("double").as("sy"),
-      sum(dec(col("x") * col("x"))).cast("double").as("sxx"),
-      sum(dec(col("x") * col("y"))).cast("double").as("sxy"))
+      dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
+      dsum(col("x") * col("x")).as("sxx"), dsum(col("x") * col("y")).as("sxy"))
     val nD = col("n").cast("double")
     val slope = (nD * col("sxy") - col("sx") * col("sy")) /
       (nD * col("sxx") - col("sx") * col("sx"))

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Ora.dec
+
 /** Unigram-LM (SentencePiece-style) subword segmentation — the second
   * tokenizer family next to [[Bpe]]: instead of greedy merges, every word
   * is segmented into the maximum-likelihood piece sequence under a unigram
@@ -31,8 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object Unigram {
 
-  private val Dec = "decimal(27,10)"
-
   /** (word, freq) relation of the corpus, bounded to maxLen. */
   def wordFreq(df: DataFrame, textCol: String, maxLen: Int): DataFrame =
     graft.Core.fanOut(df)
@@ -55,8 +55,8 @@ object Unigram {
     val tot = pc.agg(sum(col("cnt")).as("tot"))
     pc.crossJoin(broadcast(tot))
       .select(col("piece"),
-        round(log10(col("cnt").cast("double") / col("tot").cast("double")), 6)
-          .cast(Dec).as("pscore"))
+        dec(round(log10(col("cnt").cast("double") / col("tot").cast("double")), 6))
+          .as("pscore"))
   }
 
   /** Per-word Viterbi state: the exact-decimal path score and the chosen
@@ -110,7 +110,7 @@ object Unigram {
     require(estBytes <= budgetBytes,
       s"viterbi broadcasts the piece-score table — ~${estBytes >> 20} MB " +
         s"estimated (${sz.getLong(0)} pieces) exceeds the ${budgetBytes >> 20} MB budget")
-    val scoreRows = psChk.select(col("piece"), col("pscore").cast(Dec))
+    val scoreRows = psChk.select(col("piece"), dec(col("pscore")))
       .collect()
     val scoreMap: Map[String, java.math.BigDecimal] =
       scoreRows.map(r => r.getString(0) -> r.getDecimal(1)).toMap

@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Ora.dsum6
+
 /** Deterministic alternating-least-squares matrix factorization with two
   * latent factors — collaborative filtering as an exact-gated dataflow.
   * MLlib's ALS seeds factors from an engine-local RNG; here the item
@@ -25,8 +27,6 @@ import org.apache.spark.sql.functions._
   * and the final scoring pass).
   */
 object Als {
-
-  private val dec = (c: Column) => c.cast("decimal(27,10)")
 
   /** Fixed-point exact sum kernel: quantize each term to 1e-10 by FLOOR
     * (identical IEEE arithmetic on both engines — floor dodges the
@@ -132,7 +132,7 @@ object Als {
       .select(((col("r") - (col("u1") * col("v1") + col("u2") * col("v2"))) *
         (col("r") - (col("u1") * col("v1") + col("u2") * col("v2")))).as("se"))
       .agg(count(lit(1)).as("n"),
-        round(sum(dec(col("se"))), 6).cast("double").as("sse"))
+        dsum6(col("se")).as("sse"))
       .select(col("n"), sqrt(col("sse") / col("n").cast("double")).as("rmse"))
   }
 }

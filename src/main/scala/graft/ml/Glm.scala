@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Ora.dsum
+
 /** Generalized linear model training as a relational plan: logistic
   * regression via iteratively reweighted least squares (IRLS / Newton),
   * two features + intercept, a FIXED number of unrolled iterations — so
@@ -32,7 +34,6 @@ object Glm {
   def logisticIrls(df: DataFrame, yCol: String, x1Col: String, x2Col: String,
                    iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 6, s"logisticIrls: bad iters=$iters")
-    val dec = (c: Column) => c.cast("decimal(27,10)")
     val base = df.select(col(yCol).cast("double").as("y"),
         col(x1Col).cast("double").as("x1"), col(x2Col).cast("double").as("x2"))
       .filter(col("y").isNotNull && col("x1").isNotNull && col("x2").isNotNull)
@@ -47,15 +48,15 @@ object Glm {
           (p * (lit(1.0) - p)).as("w"))
       val m = scored.agg(
         count(lit(1)).as("n"),
-        sum(dec(col("w"))).cast("double").as("a11"),
-        sum(dec(col("w") * col("x1"))).cast("double").as("a12"),
-        sum(dec(col("w") * col("x2"))).cast("double").as("a13"),
-        sum(dec(col("w") * col("x1") * col("x1"))).cast("double").as("a22"),
-        sum(dec(col("w") * col("x1") * col("x2"))).cast("double").as("a23"),
-        sum(dec(col("w") * col("x2") * col("x2"))).cast("double").as("a33"),
-        sum(dec(col("y") - col("p"))).cast("double").as("g1"),
-        sum(dec((col("y") - col("p")) * col("x1"))).cast("double").as("g2"),
-        sum(dec((col("y") - col("p")) * col("x2"))).cast("double").as("g3"))
+        dsum(col("w")).as("a11"),
+        dsum(col("w") * col("x1")).as("a12"),
+        dsum(col("w") * col("x2")).as("a13"),
+        dsum(col("w") * col("x1") * col("x1")).as("a22"),
+        dsum(col("w") * col("x1") * col("x2")).as("a23"),
+        dsum(col("w") * col("x2") * col("x2")).as("a33"),
+        dsum(col("y") - col("p")).as("g1"),
+        dsum((col("y") - col("p")) * col("x1")).as("g2"),
+        dsum((col("y") - col("p")) * col("x2")).as("g3"))
       val det = col("a11") * (col("a22") * col("a33") - col("a23") * col("a23")) -
         col("a12") * (col("a12") * col("a33") - col("a23") * col("a13")) +
         col("a13") * (col("a12") * col("a23") - col("a22") * col("a13"))
@@ -93,7 +94,6 @@ object Glm {
                 iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 6, s"huberIrls: bad iters=$iters")
     require(c > 0, s"huberIrls: c must be positive; got $c")
-    val dec = (cc: Column) => cc.cast("decimal(27,10)")
     val base = df.select(col(yCol).cast("double").as("y"),
         col(xCol).cast("double").as("x"))
       .filter(col("y").isNotNull && col("x").isNotNull)
@@ -101,11 +101,11 @@ object Glm {
     def wls(weighted: DataFrame): DataFrame = {
       val m = weighted.agg(
         count(lit(1)).as("n"),
-        sum(dec(col("w"))).cast("double").as("sw"),
-        sum(dec(col("w") * col("x"))).cast("double").as("swx"),
-        sum(dec(col("w") * col("x") * col("x"))).cast("double").as("swxx"),
-        sum(dec(col("w") * col("y"))).cast("double").as("swy"),
-        sum(dec(col("w") * col("x") * col("y"))).cast("double").as("swxy"))
+        dsum(col("w")).as("sw"),
+        dsum(col("w") * col("x")).as("swx"),
+        dsum(col("w") * col("x") * col("x")).as("swxx"),
+        dsum(col("w") * col("y")).as("swy"),
+        dsum(col("w") * col("x") * col("y")).as("swxy"))
       val det = col("sw") * col("swxx") - col("swx") * col("swx")
       m.select(col("n"),
         ((col("swy") * col("swxx") - col("swx") * col("swxy")) / det).as("b0"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Ora.{dsum, dsum14, dsumOver}
 import graft.functions.Aggregators
 
 /** M9: the full model-intercomparison orchestration (reference:
@@ -24,8 +25,6 @@ object Intercomparison {
   final case class ModelConfig(name: String, features: Seq[String],
                                numTrees: Int = 15, maxDepth: Int = 20)
 
-  private def dsum(c: Column): Column = sum(c.cast("decimal(27,10)")).cast("double")
-
   /** Reference-style skill scores per (model, agg, phase, fold).
     * Input columns: model, agg, fold, phase, est, ref.
     *
@@ -43,8 +42,6 @@ object Intercomparison {
     val est = col("est")
     val ref = col("ref")
     val d = est - ref
-    // products need double the scale headroom of the linear sums
-    def dsum2(c: Column): Column = sum(c.cast("decimal(32,14)")).cast("double")
     val ed = udaf(new Aggregators.EnergyDistance())
     // GREATEST(...,0) before the sqrt: each factor is a variance times n²
     // (≥ 0 mathematically) but the decimal-rounded sums can leave a tiny
@@ -57,9 +54,9 @@ object Intercomparison {
     val base = scored.groupBy(keys: _*).agg(
       count(lit(1)).as("__n"),
       dsum(est).as("__sx"), dsum(ref).as("__sy"),
-      dsum2(est * est).as("__sxx"), dsum2(ref * ref).as("__syy"),
-      dsum2(est * ref).as("__sxy"),
-      dsum(d).as("__sd"), dsum2(d * d).as("__sdd"), dsum(abs(d)).as("__sad"),
+      dsum14(est * est).as("__sxx"), dsum14(ref * ref).as("__syy"),
+      dsum14(est * ref).as("__sxy"),
+      dsum(d).as("__sd"), dsum14(d * d).as("__sdd"), dsum(abs(d)).as("__sad"),
       round(ed(est, ref), 6).as("ed"))
       .withColumn("n", col("__n"))
       .withColumn("corr", round(when(corrDenom > 0.0,
@@ -79,9 +76,9 @@ object Intercomparison {
     val byRatio = Window.partitionBy(keys: _*).orderBy(col("ratio_db"))
     val grp = Window.partitionBy(keys: _*)
     val cum = cond
-      .withColumn("cumw", sum(col("w").cast("decimal(27,10)"))
-        .over(byRatio.rowsBetween(Window.unboundedPreceding, 0)).cast("double"))
-      .withColumn("totw", sum(col("w").cast("decimal(27,10)")).over(grp).cast("double"))
+      .withColumn("cumw",
+        dsumOver(col("w"), byRatio.rowsBetween(Window.unboundedPreceding, 0)))
+      .withColumn("totw", dsumOver(col("w"), grp))
     val quants = cum.groupBy(keys: _*).agg(
       min(when(col("cumw") >= col("totw") * 0.16, col("ratio_db"))).as("q16"),
       min(when(col("cumw") >= col("totw") * 0.84, col("ratio_db"))).as("q84"))

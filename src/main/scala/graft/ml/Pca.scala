@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Ora.{dec, dsum, dsum6}
+
 /** Principal-component extraction over an `Array[Float]` embedding column,
   * Spark-native: a one-pass distributed Gram matrix followed by a fixed
   * number of relational power-iteration rounds. The reference ecosystem
@@ -115,11 +117,8 @@ object Pca {
       // corpus size, so the rounded cast is exact everywhere.
       val w = g.join(broadcast(v.withColumnRenamed("i", "j")), Seq("j"))
         .groupBy(col("i"))
-        .agg(round(sum((col("g") * col("v")).cast("decimal(27,10)")), 6)
-          .cast("double").as("w"))
-      val n2 = w.agg(
-        round(sum((col("w") * col("w")).cast("decimal(27,10)")), 6)
-          .cast("double").as("n2"))
+        .agg(dsum6(col("g") * col("v")).as("w"))
+      val n2 = w.agg(dsum6(col("w") * col("w")).as("n2"))
       w.crossJoin(n2)
         .select(col("i"), (col("w") / sqrt(col("n2"))).as("v"))
         .localCheckpoint()
@@ -134,8 +133,7 @@ object Pca {
   private def rayleighRaw(gn: DataFrame, v: DataFrame): DataFrame =
     gn.join(broadcast(v.select(col("i"), col("v").as("vi"))), Seq("i"))
       .join(broadcast(v.select(col("i").as("j"), col("v").as("vj"))), Seq("j"))
-      .agg(sum((col("vi") * col("g") * col("vj")).cast("decimal(27,10)"))
-        .cast("double").as("lambdaRaw"))
+      .agg(dsum(col("vi") * col("g") * col("vj")).as("lambdaRaw"))
 
   /** Sign-normalize and round a final eigenvector against its normalized
     * Gram: (comp, loading, lambda) — lambda is the TRUE-scale variance
@@ -146,8 +144,7 @@ object Pca {
     val lamHat = gn
       .join(broadcast(vFinal.select(col("i"), col("v").as("vi"))), Seq("i"))
       .join(broadcast(vFinal.select(col("i").as("j"), col("v").as("vj"))), Seq("j"))
-      .agg(round(sum((col("vi") * col("g") * col("vj")).cast("decimal(27,10)")), 6)
-        .cast("double").as("lamHat"))
+      .agg(dsum6(col("vi") * col("g") * col("vj")).as("lamHat"))
     val sign = vFinal
       .orderBy(abs(col("v")).desc, col("i"))
       .limit(1)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Ora.{dsum, dsumOver}
+
 /** M6/M7: skill scores (reference: common/utils.py:76-166 perfscores,
   * performance/eval_calculate.py:30-159 contingency scores).
   *
@@ -12,8 +14,6 @@ import org.apache.spark.sql.functions._
   * order-independence.
   */
 object Scores {
-
-  private def dsum(c: Column): Column = sum(c.cast("decimal(27,10)")).cast("double")
 
   /** M6 `perfscores`: per-group N, logBias = 10·log10(Σest/Σref), conditional
     * RMSE over rows where both est and ref exceed `minValid`, and scatter =
@@ -42,10 +42,9 @@ object Scores {
     val byRatio = Window.partitionBy(col(groupCol)).orderBy(col("ratio_db"))
     val grp = Window.partitionBy(col(groupCol))
     val cum = cond
-      .withColumn("cumw", sum(col("w").cast("decimal(27,10)"))
-        .over(byRatio.rowsBetween(Window.unboundedPreceding, 0)).cast("double"))
-      .withColumn("totw", sum(col("w").cast("decimal(27,10)"))
-        .over(grp).cast("double"))
+      .withColumn("cumw",
+        dsumOver(col("w"), byRatio.rowsBetween(Window.unboundedPreceding, 0)))
+      .withColumn("totw", dsumOver(col("w"), grp))
     val quants = cum.groupBy(col(groupCol)).agg(
       min(when(col("cumw") >= col("totw") * 0.16, col("ratio_db"))).as("q16"),
       min(when(col("cumw") >= col("totw") * 0.84, col("ratio_db"))).as("q84"))

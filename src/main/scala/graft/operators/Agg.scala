@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Ora.{dec14, dsum14}
+
 /** Aggregation operators (SURVEY.md §2.4).
   *
   * All of these are single-shuffle groupBy aggregations with map-side partial
@@ -49,8 +51,7 @@ object Agg {
       // guard would still count the row's weight in the denominator — a
       // silent low bias instead of a dropped row
       val w = when(col(f).isNotNull && !isnan(col(f).cast("double")), weight)
-      (sum((col(f) * w).cast("decimal(32,14)")).cast("double") /
-       sum(w.cast("decimal(32,14)")).cast("double")).as(f)
+      (dsum14(col(f) * w) / dsum14(w)).as(f)
     }
     df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
@@ -68,7 +69,7 @@ object Agg {
     val w = when(!isnan(weight.cast("double")), weight)
     val pivoted = df.groupBy(groupCols.map(col): _*)
       .pivot(catCol, values)
-      .agg(sum(w.cast("decimal(32,14)")).cast("double"))
+      .agg(dsum14(w))
     val total = values.map(v => coalesce(col(v), lit(0.0))).reduce(_ + _)
     // a group with NO weight mass among the pivot values (all rows outside
     // `values`, or all weights NaN/NULL) has total 0: its proportions are
@@ -131,10 +132,8 @@ object Agg {
     // estimate divides the SAME rounded sums so both engines divide
     // bit-identical operands.
     all.filter(valid).groupBy(cellCols.map(col): _*)
-      .agg(round(sum((col(valueCol) * col(weightCol)).cast("decimal(32,14)")), 6)
-             .cast("double").as("sum_vw"),
-           round(sum(col(weightCol).cast("decimal(32,14)")), 6)
-             .cast("double").as("sum_w"))
+      .agg(round(sum(dec14(col(valueCol) * col(weightCol))), 6).cast("double").as("sum_vw"),
+           round(sum(dec14(col(weightCol))), 6).cast("double").as("sum_w"))
       .withColumn("estimate", col("sum_vw") / col("sum_w"))
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Ora.dec
+
 /** Event-stream behavioral analytics: funnel conversion, cohort retention,
   * and exponentially-weighted smoothing — the classic product-analytics
   * operators over an (id, ts, user, type, value) event relation.
@@ -252,7 +254,7 @@ object Behavior {
     // the conversion count is then a plain COUNT and the decimal shares
     // stay exact through both stages
     val perConv = credited.groupBy(col("channel"), col("u"), col("cid"))
-      .agg(sum(col("linear").cast("decimal(27,10)")).as("linear"),
+      .agg(sum(dec(col("linear"))).as("linear"),
         max(col("last")).as("last"))
     val attributed = perConv.groupBy(col("channel"))
       .agg(count(lit(1)).as("conversions"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Ora.{dec, dsumOver}
+
 /** Relational ETL operators (SURVEY.md §2.2/§2.3/§2.6).
   *
   * Each operator is a pure DataFrame→DataFrame function so Catalyst sees one
@@ -223,7 +225,7 @@ object Relational {
       .withColumn("rank", row_number().over(w).cast("int"))
       .withColumn("share", round(col("cnt").cast("double") / total, 6))
       .withColumn("cum_share",
-        round(sum(col("share").cast("decimal(27,10)")).over(w).cast("double"), 6))
+        round(dsumOver(col("share"), w), 6))
       .select(col("rank"), col(keyCol), col("cnt"), col("share"),
         col("cum_share"))
   }
@@ -582,7 +584,7 @@ object Relational {
   def maintainAgg(state: DataFrame, delta: DataFrame, keys: Seq[String],
                   valCol: String, opCol: String): DataFrame = {
     require(keys.nonEmpty, "maintainAgg needs at least one key")
-    val v = col(valCol).cast("decimal(27,10)")
+    val v = dec(col(valCol))
     val op = col(opCol).cast("long")
     val d = delta.groupBy(keys.map(col): _*).agg(
       sum(op).as("__dcnt"),
@@ -595,8 +597,7 @@ object Relational {
     val newCnt = coalesce(col("cnt"), lit(0L)) + coalesce(col("__dcnt"), lit(0L))
     val newSum = when(
       col("sum_v").isNotNull || col("__dsum").isNotNull,
-      coalesce(col("sum_v"), lit(0).cast("decimal(27,10)")) +
-        coalesce(col("__dsum"), lit(0).cast("decimal(27,10)")))
+      coalesce(col("sum_v"), dec(lit(0))) + coalesce(col("__dsum"), dec(lit(0))))
     // stale: a retraction at-or-beyond the stored extreme, or a
     // retraction against a group the state never saw (min_v/max_v both
     // tell the same story for absent groups — cnt null is the real test)
@@ -617,7 +618,7 @@ object Relational {
   def buildAggState(base: DataFrame, keys: Seq[String], valCol: String): DataFrame =
     base.groupBy(keys.map(col): _*).agg(
       count(lit(1)).as("cnt"),
-      sum(col(valCol).cast("decimal(27,10)")).as("sum_v"),
+      sum(dec(col(valCol))).as("sum_v"),
       min(col(valCol)).as("min_v"),
       max(col(valCol)).as("max_v"),
       lit(false).as("stale"))

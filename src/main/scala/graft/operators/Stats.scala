@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Ora.{dec, dsum, dsum6, dsumOver}
+
 /** Statistical modelling operators over relational inputs: per-group OLS
   * trend fitting, 2-D skyline (Pareto frontier), and first-order Markov
   * transition estimation. Each is one or two map-side-combinable
@@ -30,17 +32,13 @@ object Stats {
     */
   def groupedOls(df: DataFrame, groupCol: String, xCol: String,
                  yCol: String): DataFrame = {
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(27,10)")
     val x = col(xCol).cast("double")
     val y = col(yCol).cast("double")
     val s = df.filter(x.isNotNull && y.isNotNull)
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("n"),
-        sum(dec(x)).cast("double").as("sx"),
-        sum(dec(y)).cast("double").as("sy"),
-        sum(dec(x * x)).cast("double").as("sxx"),
-        sum(dec(x * y)).cast("double").as("sxy"),
-        sum(dec(y * y)).cast("double").as("syy"),
+        dsum(x).as("sx"), dsum(y).as("sy"), dsum(x * x).as("sxx"),
+        dsum(x * y).as("sxy"), dsum(y * y).as("syy"),
         min(x).as("mnx"), max(x).as("mxx"),
         min(y).as("mny"), max(y).as("mxy"))
     val n = col("n").cast("double")
@@ -146,8 +144,7 @@ object Stats {
         round(first(col("__hi")), 6).as("p_hi"),
         sum(when(col("__v") < col("__lo"), 1L).otherwise(0L)).as("n_clip_lo"),
         sum(when(col("__v") > col("__hi"), 1L).otherwise(0L)).as("n_clip_hi"),
-        round(sum(col("__w").cast("decimal(27,10)")), 6).cast("double")
-          .as("sum_winsorized"))
+        dsum6(col("__w")).as("sum_winsorized"))
   }
 
   /** Pairwise Pearson correlations among numeric columns from ONE
@@ -159,7 +156,6 @@ object Stats {
     */
   def corrPairs(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, "corrPairs needs at least two columns")
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(27,10)")
     val base = df.select(cols.map(c => col(c).cast("double").as(c)): _*)
       .filter(cols.map(col(_).isNotNull).reduceLeft(_ && _))
     // per-column aliases are POSITIONAL (s_0, sp_3), not name-concatenated:
@@ -170,11 +166,11 @@ object Stats {
     val sums =
       Seq(count(lit(1)).as("n")) ++
       cols.flatMap(c => Seq(
-        sum(dec(col(c))).cast("double").as(s"s_${idx(c)}"),
-        sum(dec(col(c) * col(c))).cast("double").as(s"ss_${idx(c)}"),
+        dsum(col(c)).as(s"s_${idx(c)}"),
+        dsum(col(c) * col(c)).as(s"ss_${idx(c)}"),
         min(col(c)).as(s"mn_${idx(c)}"), max(col(c)).as(s"mx_${idx(c)}"))) ++
       pairList.zipWithIndex.map { case (Seq(a, b), p) =>
-        sum(dec(col(a) * col(b))).cast("double").as(s"sp_$p")
+        dsum(col(a) * col(b)).as(s"sp_$p")
       }
     val m = base.agg(sums.head, sums.tail: _*)
     val n = col("n").cast("double")
@@ -228,7 +224,7 @@ object Stats {
         when(factor > 0, round(log(factor), 9)).otherwise(lit(0.0)))
       .withColumn("__dead", min(when(factor > 0, 1.0).otherwise(0.0)).over(wCum))
       .withColumn("__cum",
-        sum(col("__lnf").cast("decimal(27,10)")).over(wCum).cast("double"))
+        dsumOver(col("__lnf"), wCum))
     stepped.select(col("dur"), col("n_risk"), col("d").as("n_events"),
       col("c").as("n_censored"),
       when(col("__dead") > 0, round(exp(col("__cum")), 6))
@@ -250,14 +246,12 @@ object Stats {
     */
   def abWelchZ(df: DataFrame, groupCol: String, variantCol: String,
                valCol: String): DataFrame = {
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(27,10)")
     val v = col(valCol).cast("double")
     val s = df.filter(v.isNotNull &&
         (col(variantCol) === 0 || col(variantCol) === 1))
       .groupBy(col(groupCol), col(variantCol).cast("int").as("__arm"))
       .agg(count(lit(1)).as("n"),
-        sum(dec(v)).cast("double").as("sv"),
-        sum(dec(v * v)).cast("double").as("svv"),
+        dsum(v).as("sv"), dsum(v * v).as("svv"),
         min(v).as("mn"), max(v).as("mx"))
     def armAgg(arm: Int, c: String, out: String) =
       max(when(col("__arm") === arm, col(c))).as(out)
@@ -327,7 +321,6 @@ object Stats {
           valCol: String, maxLag: Int): DataFrame = {
     require(maxLag >= 1 && maxLag <= 64,
       s"maxLag must be in [1, 64], got $maxLag")
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(27,10)")
     val v = col(valCol).cast("double")
     val w = Window.partitionBy(col(groupCol))
       .orderBy(col(tsCol), col(tieCol))
@@ -336,16 +329,14 @@ object Stats {
         (1 to maxLag).map(l => lag(v, l).over(w).as(s"v$l")): _*)
     val aggs =
       Seq(count(lit(1)).as("n"),
-        sum(dec(col("v"))).cast("double").as("s"),
-        sum(dec(col("v") * col("v"))).cast("double").as("ss"),
+        dsum(col("v")).as("s"), dsum(col("v") * col("v")).as("ss"),
         min(col("v")).as("__mn"), max(col("v")).as("__mx")) ++
       (1 to maxLag).flatMap { l =>
         val vl = col(s"v$l")
         Seq(count(vl).as(s"n$l"),
-          sum(dec(when(vl.isNotNull, col("v") * vl))).cast("double")
-            .as(s"sxy$l"),
-          sum(dec(when(vl.isNotNull, col("v")))).cast("double").as(s"sx$l"),
-          sum(dec(vl)).cast("double").as(s"sy$l"))
+          dsum(when(vl.isNotNull, col("v") * vl)).as(s"sxy$l"),
+          dsum(when(vl.isNotNull, col("v"))).as(s"sx$l"),
+          dsum(vl).as(s"sy$l"))
       }
     val aggd = lagged.groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
       .withColumn("__m", col("s") / col("n").cast("double"))
@@ -489,8 +480,7 @@ object Stats {
       // rule): a raw scale-10 cast double-rounds on one engine once the
       // unscaled sum passes 2^53
       .agg(sum(col("w")).as("wsum"),
-        round(sum((col("w").cast("double") * col("x")).cast("decimal(27,10)")), 6)
-          .cast("double").as("wx"),
+        dsum6(col("w").cast("double") * col("x")).as("wx"),
         count(lit(1)).as("n"))
       .filter(col("wsum") > 0)
       .withColumn("mb", col("wx") / col("wsum").cast("double"))
@@ -501,7 +491,7 @@ object Stats {
       .withColumn("nreps", count(lit(1)).over(wAll))
       .groupBy(col("g"))
       .agg(max(col("n")).as("n"), max(col("nreps")).as("n_reps"),
-        round(sum(col("mb").cast("decimal(27,10)")), 6).as("__smb"),
+        round(sum(dec(col("mb"))), 6).as("__smb"),
         max(when(col("rn") === tailK, col("mb"))).as("ci_lo"),
         max(when(col("rn") === col("nreps") - tailK + 1, col("mb"))).as("ci_hi"))
       .select(col("g").as(groupCol), col("n"), col("n_reps"),
@@ -529,7 +519,6 @@ object Stats {
                         tieCol: String, yCol: String, splitCol: String,
                         alpha: Double): DataFrame = {
     require(alpha > 0 && alpha < 1, s"conformalInterval: bad alpha=$alpha")
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(27,10)")
     val x = col(xCol).cast("double")
     val y = col(yCol).cast("double")
     val base = df.filter(x.isNotNull && y.isNotNull && !isnan(y))
@@ -542,10 +531,9 @@ object Stats {
     val fit = base.filter(col("cal"))
       .groupBy(col("g"))
       .agg(count(lit(1)).as("ncal"),
-        round(sum(dec(col("x"))), 6).cast("double").as("sx"),
-        round(sum(dec(col("y"))), 6).cast("double").as("sy"),
-        round(sum(dec(col("x") * col("x"))), 6).cast("double").as("sxx"),
-        round(sum(dec(col("x") * col("y"))), 6).cast("double").as("sxy"),
+        dsum6(col("x")).as("sx"), dsum6(col("y")).as("sy"),
+        dsum6(col("x") * col("x")).as("sxx"),
+        dsum6(col("x") * col("y")).as("sxy"),
         min(col("x")).as("mnx"), max(col("x")).as("mxx"))
     val nD = col("ncal").cast("double")
     val slope = when(col("mxx") > col("mnx"),
@@ -595,7 +583,6 @@ object Stats {
     */
   def cusumChangePoint(df: DataFrame, groupCol: String, tsCol: String,
                        tieCol: String, valCol: String): DataFrame = {
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(27,10)")
     val v = col(valCol).cast("double")
     val wAll = Window.partitionBy(col(groupCol))
     val wRun = wAll.orderBy(col(tsCol), col(tieCol))
@@ -609,7 +596,7 @@ object Stats {
     // NULL sort placement
     val cum = df.filter(v.isNotNull && !isnan(v) && col(tsCol).isNotNull)
       .withColumn("__mean",
-        sum(dec(v)).over(wAll).cast("double") /
+        dsumOver(v, wAll) /
           count(lit(1)).over(wAll).cast("double"))
       .withColumn("__s", sum(dec(v - col("__mean"))).over(wRun))
     val wRank = wAll.orderBy(abs(col("__s")).desc, col(tsCol), col(tieCol))

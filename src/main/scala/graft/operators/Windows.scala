@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Ora.dsumOver
+
 /** Window / sessionization operators (SURVEY.md §2.5).
   *
   * All windows partition by a key so the sort is per-partition after one
@@ -119,8 +121,8 @@ object Windows {
       .rowsBetween(-lags, -1)
     val v = col(valCol).cast("double")
     val n = count(v).over(w).cast("double")
-    val s = sum(v.cast("decimal(27,10)")).over(w).cast("double")
-    val sq = sum((v * v).cast("decimal(27,10)")).over(w).cast("double")
+    val s = dsumOver(v, w)
+    val sq = dsumOver(v * v, w)
     val mean = s / n
     val varS = (sq - s * s / n) / (n - lit(1.0))
     // exact constant-frame test (min < max over the same frame): the

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.Core.rewriteUT
+
 /** Catalyst extension registration (SURVEY.md §2.10): the `UT(` →
   * `UNIX_TIMESTAMP(` macro as a parser injection — the idiomatic variant of
   * the reference's pre-parse string rewrite (database.py:227-234) — plus the
@@ -14,8 +16,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * family as table-valued functions ([[TableFunctions]], the reference's
   * P1 everything-through-SQL gateway surface).
   *
-  * Usage: SparkSession.builder().withExtensions(new GraftExtensions) — or
-  * spark.sql.extensions=graft.plans.GraftExtensions.
+  * Every graft session installs it through [[graft.Core.ExtensionsConf]]
+  * (spark.sql.extensions=graft.plans.GraftExtensions).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -32,18 +34,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/** Delegating parser that applies the reference's `UT(` macro to query text
-  * before the real parse — statements only; identifiers/types pass through.
+/** Delegating parser that applies the reference's `UT(` macro
+  * ([[graft.Core.rewriteUT]]) to query text before the real parse —
+  * statements only; identifiers/types pass through.
   */
 class UTMacroParser(delegate: ParserInterface) extends ParserInterface {
-  private def rewrite(sql: String): String = sql.replace("UT(", "UNIX_TIMESTAMP(")
 
   override def parsePlan(sqlText: String): LogicalPlan =
-    delegate.parsePlan(rewrite(sqlText))
+    delegate.parsePlan(rewriteUT(sqlText))
   override def parseQuery(sqlText: String): LogicalPlan =
-    delegate.parseQuery(rewrite(sqlText))
+    delegate.parseQuery(rewriteUT(sqlText))
   override def parseExpression(sqlText: String): Expression =
-    delegate.parseExpression(rewrite(sqlText))
+    delegate.parseExpression(rewriteUT(sqlText))
   override def parseTableIdentifier(sqlText: String): TableIdentifier =
     delegate.parseTableIdentifier(sqlText)
   override def parseFunctionIdentifier(sqlText: String): FunctionIdentifier =

@@ -3,6 +3,8 @@ package graft.qpe
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Ora.dec14
+
 /** Gridded QPE pipeline (SURVEY.md §3.3, §7.1 step 5).
   *
   * Everything up to the per-cell weighted feature accumulation is distributed
@@ -52,8 +54,7 @@ object Grid {
       col("w").isNotNull && !isnan(col("w").cast("double"))
     val rest = contribs.columns.filterNot(c => c == "v" || c == "w").map(col).toSeq
     contribs.filter(valid).select(rest ++ Seq(
-      (col("v") * col("w")).cast("decimal(32,14)").as("vw_dec"),
-      col("w").cast("decimal(32,14)").as("w_dec")): _*)
+      dec14(col("v") * col("w")).as("vw_dec"), dec14(col("w")).as("w_dec")): _*)
   }
 
   /** A9's per-cell half over [[contribTerms]] rows: (chx, chy, value). */
@@ -279,7 +280,7 @@ object Grid {
         .select(
           (if (onX) col(xCol) + col("t.d") else col(xCol)).as(xCol),
           (if (onX) col(yCol) else col(yCol) + col("t.d")).as(yCol),
-          (col(vCol) * col("t.w")).cast("decimal(32,14)").as("wv"),
+          dec14(col(vCol) * col("t.w")).as("wv"),
           col("t.w").cast("decimal(22,16)").as("w"),
           (col("t.d") === 0).cast("int").as("orig"))
         .groupBy(col(xCol), col(yCol))

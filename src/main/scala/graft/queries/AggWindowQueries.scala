@@ -14,7 +14,7 @@ import graft.operators.{Behavior, Stats, Windows}
   */
 object AggWindowQueries {
 
-  import Ora._
+  import graft.Ora._
 
   /** A4/F1/F2: per-column aggregation codes — mean, dB-domain mean, sum. */
   val a4DbMean: QueryDef = QueryDef(
@@ -147,12 +147,11 @@ object AggWindowQueries {
         .select($"user_id", $"ts", $"event_id", $"value")
         .withColumn("x", row_number().over(byU))
       val w = Window.partitionBy($"user_id").orderBy($"x").rowsBetween(-3, 3)
-      def ws(c: Column) = sum(c.cast("decimal(27,10)")).over(w).cast("double")
       val n = count(lit(1)).over(w)
-      val sx = ws($"x".cast("double"))
-      val sy = ws($"value")
-      val sxy = ws($"x" * $"value")
-      val sxx = ws($"x".cast("double") * $"x")
+      val sx = dsumOver($"x".cast("double"), w)
+      val sy = dsumOver($"value", w)
+      val sxy = dsumOver($"x" * $"value", w)
+      val sxx = dsumOver($"x".cast("double") * $"x", w)
       base.withColumn("slope",
           when(n > 1, r6((n * sxy - sx * sy) / (n * sxx - sx * sx))))
         .select($"user_id", $"x", $"slope")
@@ -354,11 +353,11 @@ object AggWindowQueries {
     (s, dir) => t(s, dir, "documents")
       .cube(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
-        Ora.dsum6(col("n_chars")).as("sum_chars"),
+        dsum6(col("n_chars")).as("sum_chars"),
         grouping_id().cast("int").as("gid"))
       .orderBy(col("gid"), col("lang"), col("source")),
     Some(s"""SELECT lang, source, COUNT(*) AS n_docs,
-        ${Ora.dsum6Sql("n_chars")} AS sum_chars,
+        ${dsum6Sql("n_chars")} AS sum_chars,
         CAST(GROUPING(lang) * 2 + GROUPING(source) AS INT) AS gid
       FROM documents GROUP BY CUBE (lang, source)
       ORDER BY gid, lang, source"""))
@@ -372,13 +371,12 @@ object AggWindowQueries {
     "w10_range_frame",
     (s, dir) => {
       val ev = t(s, dir, "events")
-      val sec = Ora.epochS(col("ts"))
+      val sec = epochS(col("ts"))
       val w = Window.partitionBy(col("user_id")).orderBy(sec)
         .rangeBetween(-3600L, 0L)
       ev.select(col("event_id"), col("user_id"), col("ts"), col("value"),
           count(lit(1)).over(w).as("n_1h"),
-          round(sum(col("value").cast("decimal(27,10)")).over(w)
-            .cast("double"), 6).as("sum_1h"))
+          round(dsumOver(col("value"), w), 6).as("sum_1h"))
         // partition-aligned output bound (checker-footprint control)
         .filter(col("user_id") < 40)
         .orderBy(col("event_id"))
@@ -388,7 +386,7 @@ object AggWindowQueries {
         ROUND(CAST(SUM(CAST(value AS DECIMAL(27,10))) OVER w AS DOUBLE), 6) AS sum_1h
       FROM events
       WHERE user_id < 40
-      WINDOW w AS (PARTITION BY user_id ORDER BY ${Ora.epochSql("ts")}
+      WINDOW w AS (PARTITION BY user_id ORDER BY ${epochSql("ts")}
         RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
       ORDER BY event_id"""))
 
@@ -451,18 +449,18 @@ object AggWindowQueries {
       .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"),
         col("event_type"))
       .agg(count(lit(1)).as("n"),
-        Ora.dsum6(col("value")).as("sum_v"))
-      .select(Ora.epochS(col("w.start")).as("w_start"), col("event_type"),
+        dsum6(col("value")).as("sum_v"))
+      .select(epochS(col("w.start")).as("w_start"), col("event_type"),
         col("n"), col("sum_v"))
       .orderBy(col("w_start"), col("event_type")),
     Some(s"""WITH e AS (SELECT event_type, value,
-          ${Ora.epochSql("ts")} AS sec FROM events),
+          ${epochSql("ts")} AS sec FROM events),
       x AS (SELECT event_type, value, sec - (sec % 300) AS w_start FROM e
         UNION ALL
         SELECT event_type, value,
           sec - (sec % 300) - 300 AS w_start FROM e)
       SELECT w_start, event_type, COUNT(*) AS n,
-        ${Ora.dsum6Sql("value")} AS sum_v
+        ${dsum6Sql("value")} AS sum_v
       FROM x GROUP BY w_start, event_type ORDER BY w_start, event_type"""))
 
   /** ROLLUP over (lang, source): the hierarchical-subtotal grouping-set
@@ -626,7 +624,7 @@ object AggWindowQueries {
       (s, dir) => graft.llm.TextAnalysis.phraseTopK(
           t(s, dir, "documents"), "doc_id", "text", phrase, k = k)
         .orderBy(col("rank")),
-      Some(s"""WITH w AS (SELECT doc_id, ${Ora.toksSql} AS w FROM documents),
+      Some(s"""WITH w AS (SELECT doc_id, ${toksSql} AS w FROM documents),
         g AS (SELECT doc_id, unnest([array_to_string(w[i : i + 1], ' ')
           for i in generate_series(1, len(w) - 1)]) AS sh FROM w),
         c AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_occur FROM g
@@ -653,8 +651,7 @@ object AggWindowQueries {
         t(s, dir, "events").filter(col("value").isNotNull)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
-            round(sum(term.cast("decimal(27,10)")), 6).cast("double")
-              .as("decayed_sum"))
+            dsum6(term).as("decayed_sum"))
           .orderBy(col("event_type"))
       },
       Some(s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -737,11 +734,11 @@ object AggWindowQueries {
         Seq(Seq(col("event_type")), Seq(col("hr")), Seq.empty),
         col("event_type"), col("hr"))
       .agg(count(lit(1)).as("n"),
-        Ora.dsum6(col("value")).as("sum_v"),
+        dsum6(col("value")).as("sum_v"),
         grouping_id().cast("int").as("gid"))
       .orderBy(col("gid"), col("event_type"), col("hr")),
     Some(s"""SELECT event_type, CAST(EXTRACT(HOUR FROM ts) AS INT) AS hr,
-        CAST(COUNT(*) AS BIGINT) AS n, ${Ora.dsum6Sql("value")} AS sum_v,
+        CAST(COUNT(*) AS BIGINT) AS n, ${dsum6Sql("value")} AS sum_v,
         CAST(GROUPING(event_type, EXTRACT(HOUR FROM ts)) AS INT) AS gid
       FROM events
       GROUP BY GROUPING SETS ((event_type), (EXTRACT(HOUR FROM ts)), ())
@@ -780,14 +777,14 @@ object AggWindowQueries {
       val partials = t(s, dir, "events").filter(col("value").isNotNull)
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(count(lit(1)).as("pn"),
-          sum(col("value").cast("decimal(27,10)")).as("psum"))
+          sum(dec(col("value"))).as("psum"))
       partials.groupBy(col("event_type"))
         .agg(sum(col("pn")).as("n"),
           round(sum(col("psum")), 6).cast("double").as("sum_v"))
         .orderBy(col("event_type"))
     },
     Some(s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        ${Ora.dsum6Sql("value")} AS sum_v
+        ${dsum6Sql("value")} AS sum_v
       FROM events WHERE value IS NOT NULL
       GROUP BY event_type ORDER BY event_type"""))
 
@@ -851,15 +848,15 @@ object AggWindowQueries {
         .orderBy(col("user_id"), col("bar_start"))
     },
     Some(s"""SELECT user_id,
-        CAST(FLOOR(${Ora.epochSql("ts")} / 21600) * 21600 AS BIGINT)
+        CAST(FLOOR(${epochSql("ts")} / 21600) * 21600 AS BIGINT)
           AS bar_start,
         CAST(COUNT(*) AS BIGINT) AS n,
-        MIN_BY(value, (${Ora.epochSql("ts")}
-          - CAST(FLOOR(${Ora.epochSql("ts")} / 21600) * 21600 AS BIGINT))
+        MIN_BY(value, (${epochSql("ts")}
+          - CAST(FLOOR(${epochSql("ts")} / 21600) * 21600 AS BIGINT))
           * 1000000000000 + event_id) AS open,
         MAX(value) AS high, MIN(value) AS low,
-        MAX_BY(value, (${Ora.epochSql("ts")}
-          - CAST(FLOOR(${Ora.epochSql("ts")} / 21600) * 21600 AS BIGINT))
+        MAX_BY(value, (${epochSql("ts")}
+          - CAST(FLOOR(${epochSql("ts")} / 21600) * 21600 AS BIGINT))
           * 1000000000000 + event_id) AS close
       FROM events WHERE value IS NOT NULL AND user_id < 60
       GROUP BY 1, 2 ORDER BY user_id, bar_start"""))
@@ -936,11 +933,9 @@ object AggWindowQueries {
           (col("__end") - unix_timestamp(col("ts"))).cast("double"))
       ev.groupBy(col("user_id"), col("day"))
         .agg(count(lit(1)).as("n"),
-          round(sum((col("value") * col("__w")).cast("decimal(27,10)"))
-              .cast("double") /
-            sum(col("__w").cast("decimal(27,10)")).cast("double"), 6)
+          round(dsum(col("value") * col("__w")) / dsum(col("__w")), 6)
             .as("twap"),
-          Ora.r6(Ora.dmean(col("value"))).as("row_mean"))
+          r6(dmean(col("value"))).as("row_mean"))
         .orderBy(col("user_id"), col("day"))
     },
     Some(s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day, ts,
@@ -948,14 +943,14 @@ object AggWindowQueries {
         FROM events WHERE value IS NOT NULL AND user_id < 60),
       wt AS (SELECT user_id, day, v,
         CAST(COALESCE(
-            ${Ora.epochSql("LEAD(ts, 1) OVER (PARTITION BY user_id, day ORDER BY ts, event_id)")},
-            ${Ora.epochSql("CAST(day + 1 AS TIMESTAMP)")}) -
-          ${Ora.epochSql("ts")} AS DOUBLE) AS w
+            ${epochSql("LEAD(ts, 1) OVER (PARTITION BY user_id, day ORDER BY ts, event_id)")},
+            ${epochSql("CAST(day + 1 AS TIMESTAMP)")}) -
+          ${epochSql("ts")} AS DOUBLE) AS w
         FROM ev)
     SELECT user_id, day, CAST(COUNT(*) AS BIGINT) AS n,
       ROUND(CAST(SUM(CAST((v * w) AS DECIMAL(27,10))) AS DOUBLE) /
         CAST(SUM(CAST(w AS DECIMAL(27,10))) AS DOUBLE), 6) AS twap,
-      ROUND(${Ora.dmeanSql("v")}, 6) AS row_mean
+      ROUND(${dmeanSql("v")}, 6) AS row_mean
     FROM wt GROUP BY 1, 2 ORDER BY user_id, day"""))
 
   /** Maximum drawdown of each user's cumulative (value − 50) series —
@@ -971,8 +966,7 @@ object AggWindowQueries {
       val ev = t(s, dir, "events")
         .filter(col("value").isNotNull && col("user_id") < 60)
         .withColumn("__cum",
-          sum((col("value") - lit(50.0)).cast("decimal(27,10)")).over(w)
-            .cast("double"))
+          dsumOver(col("value") - lit(50.0), w))
         .withColumn("__peak", max(col("__cum")).over(w))
         // final_level order key: the per-key row number over the SAME
         // (ts, event_id) sort the running windows use (one WindowExec) —
@@ -1015,7 +1009,7 @@ object AggWindowQueries {
     (s, dir) => {
       val daily = t(s, dir, "events").filter(col("value").isNotNull)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"), Ora.dsum6(col("value")).as("sum_v"))
+        .agg(count(lit(1)).as("n"), dsum6(col("value")).as("sum_v"))
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
       daily
         .withColumn("__pn", lag(col("n"), 1).over(w))
@@ -1030,7 +1024,7 @@ object AggWindowQueries {
         .orderBy(col("event_type"), col("day"))
     },
     Some(s"""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
-        CAST(COUNT(*) AS BIGINT) AS n, ${Ora.dsum6Sql("value")} AS sum_v
+        CAST(COUNT(*) AS BIGINT) AS n, ${dsum6Sql("value")} AS sum_v
         FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
       l AS (SELECT event_type, day, n, sum_v,
         LAG(n, 1) OVER (PARTITION BY event_type ORDER BY day) AS pn,

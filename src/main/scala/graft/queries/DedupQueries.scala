@@ -13,7 +13,7 @@ import graft.llm.{Dedup, Graph, Similarity}
   */
 object DedupQueries {
 
-  import Ora._
+  import graft.Ora._
 
   /** The verified n=3 Jaccard near-dup pair relation over `documents`
     * (minJaccard 0.5, maxDf 1000) — shared input of dedup_ngram_jaccard,
@@ -280,7 +280,7 @@ object DedupQueries {
     (s, dir) => graft.llm.Dedup.windowDupStats(
         t(s, dir, "documents"), "doc_id", "text", n = 8)
       .orderBy(col("doc_id")),
-    Some(s"""WITH sh AS (${Ora.shinglesSql(8)}),
+    Some(s"""WITH sh AS (${shinglesSql(8)}),
       c AS (SELECT doc_id, COUNT(*) OVER (PARTITION BY sh) AS docs FROM sh),
       per AS (SELECT doc_id, COUNT(*) AS n_windows,
           CAST(SUM(CASE WHEN docs > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_windows
@@ -379,7 +379,7 @@ object DedupQueries {
     (s, dir) => Dedup.removeDupSpans(t(s, dir, "documents"),
         "doc_id", "text", n = 3, maxDocs = 1)
       .orderBy(col("doc_id")),
-    Some(s"""WITH base AS (SELECT doc_id, ${Ora.toksSql} AS w FROM documents),
+    Some(s"""WITH base AS (SELECT doc_id, ${toksSql} AS w FROM documents),
       g AS (SELECT doc_id, w,
           unnest(generate_series(1, CAST(CEIL(len(w) / 3.0) AS BIGINT))) AS g
         FROM base),
@@ -553,7 +553,7 @@ object DedupQueries {
     (s, dir) => graft.llm.Dedup.prefixJaccardPairs(
         t(s, dir, "documents"), "doc_id", "text", n = 3, minJaccard = 0.5)
       .orderBy(col("da"), col("db")),
-    Some(s"""WITH sh AS (${Ora.shinglesSql(3)}),
+    Some(s"""WITH sh AS (${shinglesSql(3)}),
       dfc AS (SELECT sh, COUNT(*) AS dfc FROM sh GROUP BY 1),
       sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY 1),
       ord AS (SELECT s.doc_id, s.sh,
@@ -605,9 +605,9 @@ object DedupQueries {
           "doc_id", "text", minJaccard = 0.5)
         .orderBy(col("doc_id"))
     },
-    Some(s"""WITH sh AS (${Ora.shinglesSql(3)}),
+    Some(s"""WITH sh AS (${shinglesSql(3)}),
       hm AS (SELECT doc_id, sh,
-          ${Ora.md5LongSql("sh")} % 1000000007 AS hm FROM sh),
+          ${md5LongSql("sh")} % 1000000007 AS hm FROM sh),
       params AS (SELECT g AS i, (654435747 * (g + 1)) % 1000000007 AS a,
                         (654602297 * (g + 1)) % 1000000007 AS b
                  FROM generate_series(0, 15) t(g)),

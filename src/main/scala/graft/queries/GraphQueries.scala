@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Core
+import graft.Ora.{dsum, dsum6, toksSql}
 
 /** Graph queries over the co-purchase item graph (triangles, BFS, k-core,
   * label propagation, HITS, assortativity, Jaccard, item-CF, association
@@ -92,7 +93,7 @@ object GraphQueries {
           t(s, dir, "documents"), "text", iters = iters,
           damping = damping, k = k)
         .orderBy(col("rank")),
-      Some(s"""WITH tk AS (SELECT ${Ora.toksSql} AS w FROM documents),
+      Some(s"""WITH tk AS (SELECT ${toksSql} AS w FROM documents),
         ap AS (SELECT [{'src': w[i], 'dst': w[i + 1]}
                        for i in generate_series(1, len(w) - 1)] AS ps FROM tk),
         e0 AS (SELECT unnest(ps, recursive := true) FROM ap),
@@ -392,7 +393,6 @@ object GraphQueries {
   val assortativity: QueryDef = QueryDef(
     "graph_assortativity",
     (s, dir) => {
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(27,10)")
       val e0 = coPurchasePairs(s, dir)
         .filter(col("n_ab") >= 2).select(col("a"), col("b"))
       val ed = e0.select(col("a").as("src"), col("b").as("dst"))
@@ -403,11 +403,9 @@ object GraphQueries {
         .join(deg.select(col("src").as("dst"), col("deg").as("dy")), Seq("dst"))
         .select(col("dx").cast("double").as("x"), col("dy").cast("double").as("y"))
       val m = pairs.agg(count(lit(1)).as("n"),
-        sum(dec(col("x"))).cast("double").as("sx"),
-        sum(dec(col("y"))).cast("double").as("sy"),
-        sum(dec(col("x") * col("x"))).cast("double").as("sxx"),
-        sum(dec(col("x") * col("y"))).cast("double").as("sxy"),
-        sum(dec(col("y") * col("y"))).cast("double").as("syy"))
+        dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
+        dsum(col("x") * col("x")).as("sxx"), dsum(col("x") * col("y")).as("sxy"),
+        dsum(col("y") * col("y")).as("syy"))
       val n = col("n").cast("double")
       val cov = n * col("sxy") - col("sx") * col("sy")
       val vx = n * col("sxx") - col("sx") * col("sx")
@@ -480,8 +478,7 @@ object GraphQueries {
         val scored = owned.join(simSym,
             owned("item") === simSym("owned"))
           .groupBy(col("cust"), col("cand"))
-          .agg(round(sum(col("jac").cast("decimal(27,10)")), 6).cast("double")
-            .as("score"), count(lit(1)).as("n_neighbors"))
+          .agg(dsum6(col("jac")).as("score"), count(lit(1)).as("n_neighbors"))
           .join(owned.select(col("cust"), col("item").as("cand")),
             Seq("cust", "cand"), "left_anti")
         val w = Window.partitionBy(col("cust"))

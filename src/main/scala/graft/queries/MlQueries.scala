@@ -17,7 +17,7 @@ import graft.operators.{Stats, Windows}
   */
 object MlQueries {
 
-  import Ora._
+  import graft.Ora._
 
   /** M2: bias-correction 'cdf' quantile mapping — zero-intercept slope on
     * independently sorted (pred, obs).
@@ -499,8 +499,8 @@ object MlQueries {
           (col("value") > 50.0).as("pos"))
       e.groupBy(floor(col("est") * 10).cast("int").as("bin"))
         .agg(count(lit(1)).as("n"),
-          Ora.r6(Ora.dmean(col("est"))).as("mean_est"),
-          Ora.r6(Ora.dmean(col("pos").cast("double"))).as("pos_rate"))
+          r6(dmean(col("est"))).as("mean_est"),
+          r6(dmean(col("pos").cast("double"))).as("pos_rate"))
         .orderBy(col("bin"))
     },
     Some(s"""WITH e AS (SELECT
@@ -508,8 +508,8 @@ object MlQueries {
           (value > 50.0) AS pos
         FROM events)
       SELECT CAST(FLOOR(est * 10) AS INT) AS bin, COUNT(*) AS n,
-        ROUND(${Ora.dmeanSql("est")}, 6) AS mean_est,
-        ROUND(${Ora.dmeanSql("CAST(pos AS DOUBLE)")}, 6) AS pos_rate
+        ROUND(${dmeanSql("est")}, 6) AS mean_est,
+        ROUND(${dmeanSql("CAST(pos AS DOUBLE)")}, 6) AS pos_rate
       FROM e GROUP BY 1 ORDER BY bin"""))
 
   /** AUC-ROC of the event-id-derived score against the value>50 label —
@@ -637,14 +637,14 @@ object MlQueries {
             (coalesce(lit(k + 1) - col("er"), lit(0)).cast("double") *
               element_at(discArr, col("rank"))).as("g"))
         gain.groupBy(col("qid"))
-          .agg(sum(col("g").cast("decimal(27,10)")).cast("double").as("dcg"))
+          .agg(dsum(col("g")).as("dcg"))
           .select(col("qid"), round(col("dcg") / lit(idcg), 6).as("ndcg"))
           .orderBy(col("qid"))
       },
       Some(s"""WITH ex AS (SELECT qid, rank, vb FROM
-          (${Ora.bruteForceTopKSql(maxQid, k, dimFull)})),
+          (${bruteForceTopKSql(maxQid, k, dimFull)})),
         ap AS (SELECT qid, rank, vb FROM
-          (${Ora.bruteForceTopKSql(maxQid, k, dimPrefix)})),
+          (${bruteForceTopKSql(maxQid, k, dimPrefix)})),
         g AS (SELECT a.qid,
           CAST(COALESCE(${k + 1} - e.rank, 0) AS DOUBLE) *
             ($discCase) AS g
@@ -660,7 +660,7 @@ object MlQueries {
     */
   val logregIrls: QueryDef = {
     val iters = 3
-    val steps = Ora.irlsStepsSql(iters)
+    val steps = irlsStepsSql(iters)
     QueryDef(
       "ml_logreg_irls",
       (s, dir) => graft.ml.Glm.logisticIrls(
@@ -766,7 +766,6 @@ object MlQueries {
   val psiDrift: QueryDef = QueryDef(
     "m19_psi_drift",
     (s, dir) => {
-      val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(27,10)")
       def psiOf(bin: org.apache.spark.sql.Column, feature: String): DataFrame = {
         val b = t(s, dir, "events").filter(col("value").isNotNull)
           .select((col("event_id") % 2 === 0).as("half_a"), bin.as("bin"))
@@ -782,8 +781,8 @@ object MlQueries {
               (col("nb") + col("nbins")).cast("double")).as("pb"),
             col("nbins"))
         w.agg(first(col("nbins")).as("n_bins"),
-            round(sum(dec((col("pa") - col("pb")) * log(col("pa") / col("pb"))))
-              .cast("double"), 6).as("psi"))
+            round(dsum((col("pa") - col("pb")) * log(col("pa") / col("pb"))), 6)
+              .as("psi"))
           .select(lit(feature).as("feature"), col("n_bins"), col("psi"))
       }
       psiOf(floor(col("value") / 100.0).cast("long"), "value_bin100")
@@ -841,7 +840,6 @@ object MlQueries {
     QueryDef(
       "m20_jackknife_ci",
       (s, dir) => {
-        val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(27,10)")
         val b = t(s, dir, "events").filter(col("value").isNotNull)
           .select(col("event_type"),
             (graft.llm.TextAnalysis.md5Long(col("event_id").cast("string"))
@@ -871,7 +869,7 @@ object MlQueries {
           .orderBy(col("event_type"))
       },
       Some(s"""WITH b AS (SELECT event_type,
-          ${Ora.md5LongSql("CAST(event_id AS VARCHAR)")} % $g AS bkt,
+          ${md5LongSql("CAST(event_id AS VARCHAR)")} % $g AS bkt,
           CAST(COUNT(*) AS BIGINT) AS n,
           SUM(CAST(value AS DECIMAL(27,10))) AS sv
           FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
@@ -1005,8 +1003,8 @@ object MlQueries {
           greatest(lit(0.0), col("pred") * lit(graft.ml.FrozenRf.bcSlope)))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
-          Ora.dsum6(col("pred")).as("sum_pred"),
-          Ora.dsum6(col("pred_bc")).as("sum_pred_bc"))
+          dsum6(col("pred")).as("sum_pred"),
+          dsum6(col("pred_bc")).as("sum_pred_bc"))
         .orderBy(col("l_returnflag"))
     },
     Some {
@@ -1018,8 +1016,8 @@ object MlQueries {
           GREATEST(0.0, pred * ${graft.ml.FrozenRf.bcSlope}) AS pred_bc
           FROM sc)
       SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
-        ${Ora.dsum6Sql("pred")} AS sum_pred,
-        ${Ora.dsum6Sql("pred_bc")} AS sum_pred_bc
+        ${dsum6Sql("pred")} AS sum_pred,
+        ${dsum6Sql("pred_bc")} AS sum_pred_bc
       FROM bc GROUP BY l_returnflag ORDER BY l_returnflag"""
     })
 
@@ -1229,7 +1227,7 @@ object MlQueries {
       r AS (SELECT g, id, x, t.b FROM base, generate_series(0, ${reps - 1}) t(b)),
       wts AS (SELECT g, b, x, $poissonCaseSql AS w FROM (
         SELECT g, b, x,
-          ${Ora.md5LongSql("CONCAT(CAST(id AS VARCHAR), ':', CAST(b AS VARCHAR))")}
+          ${md5LongSql("CONCAT(CAST(id AS VARCHAR), ':', CAST(b AS VARCHAR))")}
             / ${java.lang.Double.toString(1152921504606846976.0)} AS u
         FROM r)),
       rep AS (SELECT g, b, CAST(SUM(w) AS BIGINT) AS wsum,
@@ -1316,7 +1314,7 @@ object MlQueries {
 
   /** md5-uniform init literal text shared with [[Als]]. */
   private def hashUSql(tag: String): String =
-    s"""${Ora.md5LongSql(s"CONCAT('$tag', ':', CAST(p AS VARCHAR))")}
+    s"""${md5LongSql(s"CONCAT('$tag', ':', CAST(p AS VARCHAR))")}
         / ${java.lang.Double.toString(1152921504606846976.0)}"""
 
   /** One ALS ridge half-step as SQL: five fixed-point long sums per

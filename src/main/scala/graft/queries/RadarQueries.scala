@@ -14,7 +14,7 @@ import graft.operators.{Agg, AsOf, Relational}
   */
 object RadarQueries {
 
-  import Ora._
+  import graft.Ora._
 
   /** P8: physics-constraint compound filter (shape of ml/rf.py:411-420). */
   val p8Constraint: QueryDef = QueryDef(
@@ -384,7 +384,7 @@ object RadarQueries {
       // v carries 6 decimals, so v*v needs up to 12 — a 10-decimal accumulator
       // rounds it and the near-zero variance subtraction amplifies the
       // boundary-rounding difference between engines; 14 decimals is exact
-      val sxx = sum(($"v" * $"v").cast("decimal(32,14)")).cast("double")
+      val sxx = dsum14($"v" * $"v")
       cells
         .withColumn("dx", explode(off))
         .withColumn("dy", explode(off))
@@ -574,9 +574,6 @@ object RadarQueries {
 
   private val C2 = 2.0 * Dr         // two-way PIA step
 
-  private def dwin(c: Column, w: org.apache.spark.sql.expressions.WindowSpec): Column =
-    sum(c.cast("decimal(27,10)")).over(w).cast("double")
-
   val f6Zphi: QueryDef = QueryDef(
     "f6_zphi_attenuation",
     (s, dir) => {
@@ -590,11 +587,11 @@ object RadarQueries {
         .rowsBetween(Window.unboundedPreceding, 0)
       val full = Window.partitionBy(col("user_id")).orderBy(col("rng"))
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val withPhi = base.withColumn("phidp", dwin(col("dphi_step"), cum))
+      val withPhi = base.withColumn("phidp", dsumOver(col("dphi_step"), cum))
       val withZb = withPhi.withColumn("z_b", pow(lit(10.0), col("zh") * Cz))
       val staged = withZb
-        .withColumn("itot", dwin(col("z_b"), full) * Ci)
-        .withColumn("icum", dwin(col("z_b"), cum) * Ci)
+        .withColumn("itot", dsumOver(col("z_b"), full) * Ci)
+        .withColumn("icum", dsumOver(col("z_b"), cum) * Ci)
         .withColumn("p0", first(col("phidp")).over(full))
         .withColumn("pm", last(col("phidp")).over(full))
         .withColumn("c", pow(lit(10.0), (col("pm") - col("p0")) * Ca) - 1.0)
@@ -604,7 +601,7 @@ object RadarQueries {
             col("z_b") * col("c") / (col("itot") + col("c") * col("iend")))
             .otherwise(lit(0.0)))
       staged
-        .withColumn("pia", dwin(col("ah"), cum) * C2)
+        .withColumn("pia", dsumOver(col("ah"), cum) * C2)
         .select(col("user_id"), col("rng"), round(col("ah"), 6).as("ah"),
                 round(col("pia"), 6).as("pia"),
                 round(col("zh") + col("pia"), 6).as("zh_corr"))

@@ -13,7 +13,7 @@ import graft.{Core, Database}
   */
 object RelationalQueries {
 
-  import Ora._
+  import graft.Ora._
 
   /** Flagship (SURVEY §7.2 slice): pricing summary — grouped sums/means over
     * the fact table (A4 codes 0/2, F8-style arithmetic). TPC-H Q1 shape.
@@ -412,9 +412,7 @@ object RelationalQueries {
   val j7AsofExec: QueryDef = QueryDef(
     "j7_asof_join_exec",
     (s, dir) => {
-      import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy}
-      if (!s.experimental.extraStrategies.contains(AsOfJoinStrategy))
-        s.experimental.extraStrategies = s.experimental.extraStrategies :+ AsOfJoinStrategy
+      import graft.plans.AsOfJoinPlan
       val e = t(s, dir, "events")
       val clicks = e.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
@@ -511,7 +509,7 @@ object RelationalQueries {
         .agg(count(lit(1)).as("n"),
              count(col("qty")).as("n_qty"),
              count(col("disc")).as("n_disc"),
-             Ora.dsum6(col("qty")).as("sum_qty"))
+             dsum6(col("qty")).as("sum_qty"))
         .orderBy(col("bucket"))
     },
     Some("""WITH planted AS (SELECT l_orderkey,
@@ -617,7 +615,7 @@ object RelationalQueries {
       Core.readAny(s, pqPath).orderBy(col("event_type"))
     },
     Some(s"""SELECT event_type, COUNT(*) AS n_events,
-        ${Ora.dsum6Sql("value")} AS sum_v
+        ${dsum6Sql("value")} AS sum_v
       FROM events GROUP BY event_type ORDER BY event_type"""))
 
   /** SCD Type-2 versioned dimension from the event stream: per-user
@@ -668,7 +666,7 @@ object RelationalQueries {
         .groupBy(col("i_user"), col("d"))
         .agg(count(lit(1)).as("n_events"),
           countDistinct(col("user_id")).as("n_users"),
-          Ora.dsum6(col("value")).as("sum_v"))
+          dsum6(col("value")).as("sum_v"))
         .orderBy(col("i_user"), col("d"))
     },
     Some(s"""WITH iv AS MATERIALIZED (SELECT user_id AS i_user,
@@ -679,7 +677,7 @@ object RelationalQueries {
         FROM iv JOIN events e ON e.ts >= iv.i_start AND e.ts <= iv.i_end)
       SELECT i_user, d, CAST(COUNT(*) AS BIGINT) AS n_events,
         CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-        ${Ora.dsum6Sql("value")} AS sum_v
+        ${dsum6Sql("value")} AS sum_v
       FROM m GROUP BY 1, 2 ORDER BY 1, 2"""))
 
   /** CDC changelog application: events mapped to I/U/D ops on the user key
@@ -832,7 +830,7 @@ object RelationalQueries {
         .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
       val v2 = ev.filter(col("user_id") % 2 === 1)
         .groupBy(col("event_type")).agg(count(lit(1)).as("n"),
-          Ora.dsum6(col("value")).as("sum_v"))
+          dsum6(col("value")).as("sum_v"))
       val base = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_schema_evo")
       val p1 = new java.io.File(base, "v1").getAbsolutePath
@@ -842,8 +840,7 @@ object RelationalQueries {
       s.read.option("mergeSchema", "true").parquet(p1, p2)
         .groupBy(col("event_type"))
         .agg(sum(col("n")).as("n_rows"),
-          round(sum(coalesce(col("sum_v"), lit(0.0)).cast("decimal(27,10)")), 6)
-            .cast("double").as("sum_v"))
+          dsum6(coalesce(col("sum_v"), lit(0.0))).as("sum_v"))
         .orderBy(col("event_type"))
     },
     Some(s"""WITH ev AS (SELECT * FROM events WHERE value IS NOT NULL),
@@ -851,7 +848,7 @@ object RelationalQueries {
         CAST(NULL AS DOUBLE) AS sum_v FROM ev WHERE user_id % 2 = 0
         GROUP BY 1),
       v2 AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        ${Ora.dsum6Sql("value")} AS sum_v FROM ev WHERE user_id % 2 = 1
+        ${dsum6Sql("value")} AS sum_v FROM ev WHERE user_id % 2 = 1
         GROUP BY 1),
       u AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2)
     SELECT event_type, CAST(SUM(n) AS BIGINT) AS n_rows,
@@ -921,7 +918,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
       val counts = ev.groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
-          Ora.dsum6(col("value")).as("sum_v"))
+          dsum6(col("value")).as("sum_v"))
       val types = ev.groupBy(col("user_id"))
         .agg(countDistinct(col("event_type")).as("n_types"))
       def writeBucketed(df: DataFrame, name: String): Unit =
@@ -934,7 +931,7 @@ object RelationalQueries {
         .orderBy(col("user_id"))
     },
     Some(s"""WITH c AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-        ${Ora.dsum6Sql("value")} AS sum_v FROM events GROUP BY 1),
+        ${dsum6Sql("value")} AS sum_v FROM events GROUP BY 1),
       t AS (SELECT user_id, CAST(COUNT(DISTINCT event_type) AS BIGINT)
         AS n_types FROM events GROUP BY 1)
     SELECT c.user_id, c.n_events, c.sum_v, t.n_types
@@ -948,15 +945,15 @@ object RelationalQueries {
     (s, dir) => {
       val counts = t(s, dir, "events").groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"))
-      val avgN = counts.agg(Ora.dmean(col("n").cast("double")).as("avg_n"))
+      val avgN = counts.agg(dmean(col("n").cast("double")).as("avg_n"))
       counts.crossJoin(broadcast(avgN))
         .filter(col("n").cast("double") > col("avg_n"))
-        .select(col("event_type"), col("n"), Ora.r6(col("avg_n")).as("avg_n"))
+        .select(col("event_type"), col("n"), r6(col("avg_n")).as("avg_n"))
         .orderBy(col("event_type"))
     },
     Some(s"""WITH c AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
         FROM events GROUP BY 1),
-      a AS (SELECT ${Ora.dmeanSql("CAST(n AS DOUBLE)")} AS avg_n FROM c)
+      a AS (SELECT ${dmeanSql("CAST(n AS DOUBLE)")} AS avg_n FROM c)
     SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
       ROUND((SELECT avg_n FROM a), 6) AS avg_n
     FROM events GROUP BY event_type
@@ -1145,7 +1142,7 @@ object RelationalQueries {
       val manifest = t(s, dir, "orders")
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("part"),
           pmod(col("o_orderkey"), lit(50)).as("file"))
-        .agg(round(sum(col("o_totalprice").cast("decimal(27,10)")), 0)
+        .agg(round(sum(dec(col("o_totalprice"))), 0)
           .cast("long").as("size"))
       Layout.compactionPlan(manifest, "part", "file", "size", 1000000L)
         .orderBy(col("part"), col("bin"), col("file"))

@@ -12,7 +12,7 @@ import graft.llm.{GraphAnn, Similarity, TextAnalysis}
   */
 object SimsearchQueries {
 
-  import Ora._
+  import graft.Ora._
 
   /** Brute-force cosine top-k for the first 10 vectors as queries. */
   val simsearchTopK: QueryDef = QueryDef(
@@ -53,7 +53,7 @@ object SimsearchQueries {
           "vec_id", "embedding", "label", dim = 64, k = 5, nprobe = 3)
         .orderBy(col("qid"), col("rank"))
     },
-    Some(Ora.ivfLabelSql(maxQid = 10, k = 5, nprobe = 3, dim = 64)))
+    Some(ivfLabelSql(maxQid = 10, k = 5, nprobe = 3, dim = 64)))
 
   /** Similarity at scale: IVF with a LEARNED coarse quantizer — a
     * deterministic Lloyd k-means fit (seed-vector init, 2 assignment /
@@ -83,22 +83,22 @@ object SimsearchQueries {
         .orderBy(col("qid"), col("rank"))
     },
     Some {
-      val centCols = Ora.centMeanSql("e.embedding", 64)
-      val qcDot = Ora.centDotSql("qv", 64)
-      val eDot = Ora.centDotSql("e.embedding", 64)
-      val cNorm = Ora.centNormSql(64)
-      val qNorm = Ora.normArrSql("qv", 64)
-      val eNorm = Ora.normArrSql("e.embedding", 64)
+      val centCols = centMeanSql("e.embedding", 64)
+      val qcDot = centDotSql("qv", 64)
+      val eDot = centDotSql("e.embedding", 64)
+      val cNorm = centNormSql(64)
+      val qNorm = normArrSql("qv", 64)
+      val eNorm = normArrSql("e.embedding", 64)
       s"""WITH sd AS MATERIALIZED (SELECT vec_id AS cell, embedding AS cv
             FROM embeddings WHERE vec_id < 8),
         asn1 AS MATERIALIZED (SELECT vec_id, cell FROM (
             SELECT e.vec_id, s.cell,
               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                (${Ora.dotArrSql("e.embedding", "s.cv", 64)}) /
-                (SQRT($eNorm) * SQRT(${Ora.normArrSql("s.cv", 64)})) DESC,
+                (${dotArrSql("e.embedding", "s.cv", 64)}) /
+                (SQRT($eNorm) * SQRT(${normArrSql("s.cv", 64)})) DESC,
                 s.cell) AS rn
             FROM embeddings e CROSS JOIN sd s
-            WHERE SQRT($eNorm) * SQRT(${Ora.normArrSql("s.cv", 64)}) > 0)
+            WHERE SQRT($eNorm) * SQRT(${normArrSql("s.cv", 64)}) > 0)
           WHERE rn = 1),
         cent1 AS MATERIALIZED (SELECT a.cell, $centCols
           FROM embeddings e JOIN asn1 a USING (vec_id) GROUP BY a.cell),
@@ -125,9 +125,9 @@ object SimsearchQueries {
         scored AS (SELECT qid, vb, cos,
             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, vb) AS rank
           FROM (SELECT p.qid, e.vec_id AS vb,
-              ROUND((${Ora.dotArrSql("p.qv", "e.embedding", 64)}) /
-                (SQRT(${Ora.normArrSql("p.qv", 64)}) *
-                 SQRT(${Ora.normArrSql("e.embedding", 64)})), 6) AS cos
+              ROUND((${dotArrSql("p.qv", "e.embedding", 64)}) /
+                (SQRT(${normArrSql("p.qv", 64)}) *
+                 SQRT(${normArrSql("e.embedding", 64)})), 6) AS cos
             FROM probes p
             JOIN asn2 a ON a.ivf_cell = p.ivf_cell
             JOIN embeddings e ON e.vec_id = a.vec_id
@@ -286,7 +286,7 @@ object SimsearchQueries {
     },
     Some(s"""WITH $ivfFixedCtes,
       approx AS (SELECT qid, vb FROM scored WHERE rank <= 5),
-      exact AS MATERIALIZED (SELECT qid, vb FROM (${Ora.bruteForceTopKSql(10, 5, 64)})),
+      exact AS MATERIALIZED (SELECT qid, vb FROM (${bruteForceTopKSql(10, 5, 64)})),
       hit AS (SELECT e.qid, COUNT(*) AS n_hit
         FROM exact e JOIN approx a ON a.qid = e.qid AND a.vb = e.vb
         GROUP BY e.qid),
@@ -340,8 +340,8 @@ object SimsearchQueries {
         dim = 64, k = 5)
       graft.llm.Similarity.recallAtK(approx, exact).orderBy(col("qid"))
     },
-    Some(s"""WITH approx AS (SELECT qid, vb FROM (${Ora.bruteForceTopKSql(10, 5, 16)})),
-      exact AS (SELECT qid, vb FROM (${Ora.bruteForceTopKSql(10, 5, 64)})),
+    Some(s"""WITH approx AS (SELECT qid, vb FROM (${bruteForceTopKSql(10, 5, 16)})),
+      exact AS (SELECT qid, vb FROM (${bruteForceTopKSql(10, 5, 64)})),
       hit AS (SELECT e.qid, COUNT(*) AS n_hit
         FROM exact e JOIN approx a ON a.qid = e.qid AND a.vb = e.vb
         GROUP BY e.qid),
@@ -444,12 +444,12 @@ object SimsearchQueries {
           WHERE vec_id < 5),
         probes AS (SELECT qid, cell FROM (
             SELECT q.qid, s.cell, ROW_NUMBER() OVER (PARTITION BY q.qid
-              ORDER BY (${Ora.dotArrSql("q.qv", "s.cv", 64)}) /
-                (SQRT(${Ora.normArrSql("q.qv", 64)}) *
-                 SQRT(${Ora.normArrSql("s.cv", 64)})) DESC, s.cell) AS rn
+              ORDER BY (${dotArrSql("q.qv", "s.cv", 64)}) /
+                (SQRT(${normArrSql("q.qv", 64)}) *
+                 SQRT(${normArrSql("s.cv", 64)})) DESC, s.cell) AS rn
             FROM q CROSS JOIN seeds s
-            WHERE SQRT(${Ora.normArrSql("q.qv", 64)}) *
-                  SQRT(${Ora.normArrSql("s.cv", 64)}) > 0)
+            WHERE SQRT(${normArrSql("q.qv", 64)}) *
+                  SQRT(${normArrSql("s.cv", 64)}) > 0)
           WHERE rn <= 2),
         qr AS (SELECT p.qid, p.cell,
             [CAST(q.qv[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE)
@@ -517,14 +517,14 @@ object SimsearchQueries {
     Some(s"""WITH $ivfPqCtes,
         short AS (SELECT qid, vb FROM r WHERE rank <= 50),
         rer AS (SELECT s.qid, s.vb,
-            ROUND((${Ora.dotArrSql("qe.embedding", "ce.embedding", 64)}) /
-              (SQRT(${Ora.normArrSql("qe.embedding", 64)}) *
-               SQRT(${Ora.normArrSql("ce.embedding", 64)})), 6) AS cos
+            ROUND((${dotArrSql("qe.embedding", "ce.embedding", 64)}) /
+              (SQRT(${normArrSql("qe.embedding", 64)}) *
+               SQRT(${normArrSql("ce.embedding", 64)})), 6) AS cos
           FROM short s
           JOIN embeddings qe ON qe.vec_id = s.qid
           JOIN embeddings ce ON ce.vec_id = s.vb
-          WHERE SQRT(${Ora.normArrSql("qe.embedding", 64)}) *
-                SQRT(${Ora.normArrSql("ce.embedding", 64)}) > 0),
+          WHERE SQRT(${normArrSql("qe.embedding", 64)}) *
+                SQRT(${normArrSql("ce.embedding", 64)}) > 0),
         rr AS (SELECT qid, vb, cos, ROW_NUMBER() OVER (PARTITION BY qid
             ORDER BY cos DESC, vb) AS rank FROM rer)
         SELECT qid, CAST(rank AS INT) AS rank, vb, cos
@@ -561,14 +561,14 @@ object SimsearchQueries {
         .orderBy(col("rank")),
       Some(s"""WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
         r0 AS (SELECT c.vec_id AS cid,
-            ROUND(${Ora.cosineSql("c", "q", dim)}, 6) AS rel, c.embedding
+            ROUND(${cosineSql("c", "q", dim)}, 6) AS rel, c.embedding
           FROM embeddings c, q WHERE c.vec_id <> 0),
         cand AS MATERIALIZED (SELECT cid, rel, embedding FROM r0
           WHERE rel IS NOT NULL ORDER BY rel DESC, cid LIMIT $nCand),
         sims AS MATERIALIZED (SELECT a.cid AS ai, b.cid AS bi,
-            ROUND(${Ora.cosineSql("a", "b", dim)}, 6) AS s
+            ROUND(${cosineSql("a", "b", dim)}, 6) AS s
           FROM cand a JOIN cand b ON a.cid <> b.cid
-          WHERE ${Ora.cosineSql("a", "b", dim)} IS NOT NULL),
+          WHERE ${cosineSql("a", "b", dim)} IS NOT NULL),
         s1 AS MATERIALIZED (SELECT 1 AS rank, cid, rel,
             ROUND($lSql * rel - $omlSql * 0.0, 10) AS score
           FROM cand ORDER BY score DESC, cid LIMIT 1),
@@ -592,7 +592,6 @@ object SimsearchQueries {
           .select((col("vec_id") % 2 === 0).as("half_a"),
             posexplode(col("embedding")).as(Seq("d", "v")))
           .select(col("half_a"), col("d"), col("v").cast("double").as("v"))
-        val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(27,10)")
         val perDim = e.groupBy(col("d"))
           .agg(sum(when(col("half_a"), dec(col("v")))).cast("double").as("sa"),
             sum(when(!col("half_a"), dec(col("v")))).cast("double").as("sb"),
@@ -603,11 +602,10 @@ object SimsearchQueries {
             col("na"), col("nb"))
         perDim.agg(
           first(col("na")).as("n_dims_a"),
-          sum(dec(col("ca") * col("cb"))).cast("double").as("dot"),
-          sum(dec(col("ca") * col("ca"))).cast("double").as("n2a"),
-          sum(dec(col("cb") * col("cb"))).cast("double").as("n2b"),
-          sum(dec((col("ca") - col("cb")) * (col("ca") - col("cb"))))
-            .cast("double").as("l2s"))
+          dsum(col("ca") * col("cb")).as("dot"),
+          dsum(col("ca") * col("ca")).as("n2a"),
+          dsum(col("cb") * col("cb")).as("n2b"),
+          dsum((col("ca") - col("cb")) * (col("ca") - col("cb"))).as("l2s"))
           .select(col("n_dims_a").as("n_vecs_a"),
             round(col("dot") / sqrt(col("n2a") * col("n2b")), 6)
               .as("centroid_cosine"),
@@ -737,7 +735,7 @@ object SimsearchQueries {
           candidateFilter = col("vec_id") % 3 === 0)
         .orderBy(col("qid"), col("rank"))
     },
-    Some(Ora.ivfLabelSql(maxQid = 10, k = 5, nprobe = 3, dim = 64,
+    Some(ivfLabelSql(maxQid = 10, k = 5, nprobe = 3, dim = 64,
       extraCandPred = "e.vec_id % 3 = 0")))
 
   /** Graph ANN (NSW/HNSW family) under the deterministic fixed-seed

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Ora
 import graft.llm.Dedup
 
 /** Sketch queries: Count-Min, HyperLogLog, KMV, Bloom-filter pruning,

@@ -13,7 +13,7 @@ import graft.operators.{Behavior, Relational, Stats, Windows}
   */
 object StatsQueries {
 
-  import Ora._
+  import graft.Ora._
 
   /** DuckDB mirror of Curation.sampleBucket. */
   private def bucketSql(idExpr: String, salt: String): String =
@@ -103,9 +103,9 @@ object StatsQueries {
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("split"), col("lang")),
     Some(s"""WITH a AS (SELECT lang,
-          CASE WHEN ${Ora.md5LongSql("CONCAT(CAST(doc_id AS VARCHAR), 'graft')")}
+          CASE WHEN ${md5LongSql("CONCAT(CAST(doc_id AS VARCHAR), 'graft')")}
                  % 1000000 < 800000 THEN 'train'
-               WHEN ${Ora.md5LongSql("CONCAT(CAST(doc_id AS VARCHAR), 'graft')")}
+               WHEN ${md5LongSql("CONCAT(CAST(doc_id AS VARCHAR), 'graft')")}
                  % 1000000 < 900000 THEN 'val'
                ELSE 'test' END AS split
         FROM documents)
@@ -119,7 +119,7 @@ object StatsQueries {
   val sampleWeighted: QueryDef = {
     val k = 50
     val powSql = s"CAST(${math.pow(2.0, 60).toString} AS DOUBLE)"
-    val hSql = Ora.md5LongSql("'wrsgraft:' || CAST(doc_id AS VARCHAR)")
+    val hSql = md5LongSql("'wrsgraft:' || CAST(doc_id AS VARCHAR)")
     QueryDef(
       "sample_weighted",
       (s, dir) => graft.llm.Curation.weightedSample(
@@ -394,8 +394,8 @@ object StatsQueries {
         pu AS (SELECT e.user_id, MIN(e.ts) AS t1 FROM events e
           JOIN sg USING (user_id)
           WHERE e.event_type = 'purchase' AND e.ts > sg.t0 GROUP BY 1),
-        subj AS (SELECT CAST(FLOOR((COALESCE(${Ora.epochSql("t1")}, $horizon) -
-            ${Ora.epochSql("t0")}) / 3600.0) AS BIGINT) AS dur,
+        subj AS (SELECT CAST(FLOOR((COALESCE(${epochSql("t1")}, $horizon) -
+            ${epochSql("t0")}) / 3600.0) AS BIGINT) AS dur,
             (t1 IS NOT NULL) AS obs
           FROM sg LEFT JOIN pu USING (user_id)),
         g AS (SELECT dur,
@@ -446,7 +446,7 @@ object StatsQueries {
       l AS (SELECT day, ts, LAG(ts) OVER (PARTITION BY day
         ORDER BY ts, event_id) AS prev FROM b)
     SELECT day, CAST(COUNT(*) AS BIGINT) AS n_events,
-      MAX(${Ora.epochSql("ts")} - ${Ora.epochSql("prev")}) AS max_gap_s
+      MAX(${epochSql("ts")} - ${epochSql("prev")}) AS max_gap_s
     FROM l GROUP BY 1 ORDER BY day"""))
 
   /** RFM segmentation over purchase events: recency (days before the
@@ -474,7 +474,7 @@ object StatsQueries {
           .agg(floor((lit(refEpoch) - max(unix_timestamp(col("ts")))) /
               lit(86400.0)).cast("long").as("recency_days"),
             count(lit(1)).as("frequency"),
-            Ora.dsum6(col("value")).as("monetary"))
+            dsum6(col("value")).as("monetary"))
           .localCheckpoint() // threshold passes + final scan read it 3×
         val n = base.count()
         val cols3 = Seq("recency_days", "frequency", "monetary")
@@ -507,10 +507,10 @@ object StatsQueries {
                 + (CASE WHEN CAST($v AS DOUBLE) < $q[2] THEN 1 ELSE 0 END)
                 + (CASE WHEN CAST($v AS DOUBLE) < $q[3] THEN 1 ELSE 0 END) AS INT)"""
         s"""WITH base AS MATERIALIZED (SELECT user_id,
-          CAST(FLOOR(($refEpoch - MAX(${Ora.epochSql("ts")})) / 86400.0)
+          CAST(FLOOR(($refEpoch - MAX(${epochSql("ts")})) / 86400.0)
             AS BIGINT) AS recency_days,
           CAST(COUNT(*) AS BIGINT) AS frequency,
-          ${Ora.dsum6Sql("value")} AS monetary
+          ${dsum6Sql("value")} AS monetary
           FROM events WHERE event_type = 'purchase' AND value IS NOT NULL
           GROUP BY 1),
         th AS (SELECT
@@ -544,24 +544,24 @@ object StatsQueries {
             hour(col("ts")).as("hr"), col("value"))
         val train = ev.filter(col("day") < lit(testDay).cast("date"))
           .groupBy(col("event_type"), col("hr"))
-          .agg(Ora.dmean(col("value")).as("pred"))
+          .agg(dmean(col("value")).as("pred"))
         val test = ev.filter(col("day") === lit(testDay).cast("date"))
         test.join(train, Seq("event_type", "hr"))
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_test"),
-            Ora.r6(Ora.dmean(abs(col("value") - col("pred")))).as("mae"),
-            Ora.r6(Ora.dmean(col("value") - col("pred"))).as("bias"))
+            r6(dmean(abs(col("value") - col("pred")))).as("mae"),
+            r6(dmean(col("value") - col("pred"))).as("bias"))
           .orderBy(col("event_type"))
       },
       Some(s"""WITH ev AS (SELECT event_type, CAST(ts AS DATE) AS day,
           CAST(EXTRACT(HOUR FROM ts) AS INT) AS hr, CAST(value AS DOUBLE) AS v
           FROM events WHERE value IS NOT NULL),
-        train AS (SELECT event_type, hr, ${Ora.dmeanSql("v")} AS pred
+        train AS (SELECT event_type, hr, ${dmeanSql("v")} AS pred
           FROM ev WHERE day < DATE '$testDay' GROUP BY 1, 2),
         test AS (SELECT * FROM ev WHERE day = DATE '$testDay')
       SELECT t.event_type, CAST(COUNT(*) AS BIGINT) AS n_test,
-        ROUND(${Ora.dmeanSql("ABS(t.v - tr.pred)")}, 6) AS mae,
-        ROUND(${Ora.dmeanSql("t.v - tr.pred")}, 6) AS bias
+        ROUND(${dmeanSql("ABS(t.v - tr.pred)")}, 6) AS mae,
+        ROUND(${dmeanSql("t.v - tr.pred")}, 6) AS bias
       FROM test t JOIN train tr ON tr.event_type = t.event_type
         AND tr.hr = t.hr
       GROUP BY t.event_type ORDER BY t.event_type"""))
@@ -809,9 +809,9 @@ object StatsQueries {
           .map(l => s"LAG(v, $l) OVER w AS v$l").mkString(",\n            ")
         val lagAggs = (1 to maxLag).map { l =>
           s"""CAST(COUNT(v$l) AS BIGINT) AS n$l,
-            ${Ora.dsumSql(s"CASE WHEN v$l IS NOT NULL THEN v * v$l END")} AS sxy$l,
-            ${Ora.dsumSql(s"CASE WHEN v$l IS NOT NULL THEN v END")} AS sx$l,
-            ${Ora.dsumSql(s"v$l")} AS sy$l"""
+            ${dsumSql(s"CASE WHEN v$l IS NOT NULL THEN v * v$l END")} AS sxy$l,
+            ${dsumSql(s"CASE WHEN v$l IS NOT NULL THEN v END")} AS sx$l,
+            ${dsumSql(s"v$l")} AS sy$l"""
         }.mkString(",\n          ")
         val branches = (1 to maxLag).map { l =>
           s"""SELECT event_type, CAST($l AS INT) AS lag, n$l AS n_pairs,
@@ -828,7 +828,7 @@ object StatsQueries {
             $lagCols
           FROM ev WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)),
           a AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-            ${Ora.dsumSql("v")} AS s, ${Ora.dsumSql("v * v")} AS ss,
+            ${dsumSql("v")} AS s, ${dsumSql("v * v")} AS ss,
             MIN(v) AS mn, MAX(v) AS mx,
           $lagAggs
           FROM l GROUP BY 1),
@@ -851,9 +851,9 @@ object StatsQueries {
     * Scala side uses.
     */
   private def kcRoundsSql(k: Int, dim: Int): String = {
-    val nb = Ora.normArrSql("b.v", dim)
-    val nc = Ora.normArrSql("c.v", dim)
-    val dbc = Ora.dotArrSql("b.v", "c.v", dim)
+    val nb = normArrSql("b.v", dim)
+    val nc = normArrSql("c.v", dim)
+    val dbc = dotArrSql("b.v", "c.v", dim)
     (2 to k).map { r =>
       s"""r$r AS (SELECT $r AS sel_order, id, v, dist FROM (
           SELECT b.id, b.v, MIN(($nb) + ($nc) - 2.0 * ($dbc)) AS dist,
@@ -879,7 +879,7 @@ object StatsQueries {
         WHERE embedding IS NOT NULL AND len(embedding) = $kcDim),
       c1 AS (SELECT 1 AS sel_order, id, v, CAST(NULL AS DOUBLE) AS dist FROM (
         SELECT id, v FROM base
-        ORDER BY (${Ora.normArrSql("v", kcDim)}) DESC, id LIMIT 1)),
+        ORDER BY (${normArrSql("v", kcDim)}) DESC, id LIMIT 1)),
       ${kcRoundsSql(kcK, kcDim)}
       SELECT sel_order, id, ROUND(dist, 6) AS dist FROM c$kcK
       ORDER BY sel_order"""))

@@ -13,7 +13,7 @@ import graft.llm.{Curation, Dedup, Multimodal, TextAnalysis, Unigram}
   */
 object TextQueries {
 
-  import Ora._
+  import graft.Ora._
 
   /** Audio-style overlapped window sampling over the payload (64-byte
     * windows, stride 48; short docs yield one truncated window).
@@ -325,7 +325,7 @@ object TextQueries {
     (s, dir) => graft.llm.TextAnalysis.unigramSurprisal(
         t(s, dir, "documents"), "doc_id", "text")
       .orderBy(col("doc_id")),
-    Some(s"""WITH tok AS (SELECT doc_id, unnest(${Ora.toksSql}) AS tok FROM documents),
+    Some(s"""WITH tok AS (SELECT doc_id, unnest(${toksSql}) AS tok FROM documents),
       freq AS (SELECT tok, COUNT(*) AS cnt FROM tok GROUP BY tok),
       tot AS (SELECT SUM(cnt) AS tot FROM freq),
       sv AS (SELECT doc_id,
@@ -450,7 +450,7 @@ object TextQueries {
         isTrain = col("doc_id") % 5 =!= 0)
       .orderBy(col("doc_id")),
     Some(s"""WITH base AS (SELECT doc_id, doc_id % 5 <> 0 AS is_train,
-          ${Ora.toksSql} AS w
+          ${toksSql} AS w
         FROM documents),
       g AS (SELECT doc_id, is_train,
           [{'w1': w[i], 'w2': w[i + 1]} for i in generate_series(1, len(w) - 1)] AS bgs
@@ -516,7 +516,7 @@ object TextQueries {
             array_to_string([w[j] for j in generate_series(1, len(w))], ' ')
               || ' </w>' AS sym
           FROM (SELECT w, COUNT(*) AS cnt
-                FROM (SELECT unnest(${Ora.toksSql}) AS w FROM documents)
+                FROM (SELECT unnest(${toksSql}) AS w FROM documents)
                 GROUP BY w)),
       $stepCtes
       SELECT * FROM ($unionSteps) ORDER BY step"""))
@@ -546,7 +546,7 @@ object TextQueries {
           SELECT doc_id, unnest([{'tok_idx': CAST(j - 1 AS INT), 'w': t[j]}
                                  for j in generate_series(1, len(t))],
                                 recursive := true)
-          FROM (SELECT doc_id, ${Ora.toksSql} AS t FROM documents
+          FROM (SELECT doc_id, ${toksSql} AS t FROM documents
                 WHERE doc_id < 100)),
         sym AS (SELECT doc_id, tok_idx, w,
             array_to_string([w[j] for j in generate_series(1, len(w))], ' ')
@@ -635,7 +635,7 @@ object TextQueries {
         "doc_id", "text", "lang", col("doc_id") % 5 =!= 0)
       .orderBy(col("doc_id")),
     Some(s"""WITH base AS (SELECT doc_id, lang, (doc_id % 5 != 0) AS is_train,
-          ${Ora.toksSql} AS w FROM documents),
+          ${toksSql} AS w FROM documents),
       ttok AS (SELECT lang AS label, unnest(w) AS tok FROM base WHERE is_train),
       cls AS (SELECT lang AS label, COUNT(*) AS nd FROM base WHERE is_train GROUP BY 1),
       tot AS (SELECT COUNT(*) AS td FROM base WHERE is_train),
@@ -681,7 +681,7 @@ object TextQueries {
     (s, dir) => Curation.wordlistScreen(t(s, dir, "documents"),
         "doc_id", "text", DenyList, maxFraction = 0.05)
       .orderBy(col("doc_id")),
-    Some(s"""WITH b AS (SELECT doc_id, ${Ora.toksSql} AS w FROM documents),
+    Some(s"""WITH b AS (SELECT doc_id, ${toksSql} AS w FROM documents),
       c AS (SELECT doc_id,
           CAST(len(w) AS BIGINT) AS n_tokens,
           CAST(len(list_filter(w, x -> list_contains(['big','error','slow'], x)))
@@ -745,7 +745,7 @@ object TextQueries {
     },
     Some(s"""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 20 <> 0),
       bench AS (SELECT * FROM documents WHERE doc_id % 20 = 0),
-      b AS (SELECT doc_id, ${Ora.toksSql} AS w FROM corpus),
+      b AS (SELECT doc_id, ${toksSql} AS w FROM corpus),
       g AS (SELECT doc_id, w,
           [array_to_string(w[i : i + 1], ' ')
            for i in generate_series(1, len(w) - 1)] AS grams
@@ -777,10 +777,10 @@ object TextQueries {
       kept AS (SELECT c.* FROM corpus c
         JOIN q USING (doc_id) JOIN keepers USING (doc_id)
         JOIN clean USING (doc_id)),
-      sp AS (SELECT lang, ${Ora.toksSql} AS w,
-          CASE WHEN ${Ora.md5LongSql("CONCAT(CAST(doc_id AS VARCHAR), 'graft')")}
+      sp AS (SELECT lang, ${toksSql} AS w,
+          CASE WHEN ${md5LongSql("CONCAT(CAST(doc_id AS VARCHAR), 'graft')")}
                  % 1000000 < 800000 THEN 'train'
-               WHEN ${Ora.md5LongSql("CONCAT(CAST(doc_id AS VARCHAR), 'graft')")}
+               WHEN ${md5LongSql("CONCAT(CAST(doc_id AS VARCHAR), 'graft')")}
                  % 1000000 < 900000 THEN 'val'
                ELSE 'test' END AS split
         FROM kept)
@@ -808,7 +808,7 @@ object TextQueries {
     Some(s"""WITH corpus AS (SELECT text FROM documents
           UNION ALL SELECT substr(text, 2) AS text FROM documents),
       vocab AS (SELECT w AS word, COUNT(*) AS freq
-          FROM (SELECT unnest(${Ora.toksSql}) AS w FROM corpus)
+          FROM (SELECT unnest(${toksSql}) AS w FROM corpus)
           WHERE LENGTH(w) <= 24 GROUP BY 1),
       vr AS (SELECT word, freq, unnest(list_distinct(list_append(
             [substr(word, 1, i - 1) || substr(word, i + 1, LENGTH(word) - i)
@@ -866,13 +866,13 @@ object TextQueries {
   /** (word, freq) CTE over a filtered documents slice. */
   private def wordsCte(name: String, where: String): String =
     s"""$name AS MATERIALIZED (SELECT w AS word, COUNT(*) AS freq
-          FROM (SELECT unnest(${Ora.toksSql}) AS w FROM documents
+          FROM (SELECT unnest(${toksSql}) AS w FROM documents
                 WHERE $where)
           WHERE LENGTH(w) <= $MaxLen GROUP BY 1)"""
 
   private val initCtes: String =
     s"""wf AS MATERIALIZED (SELECT w AS word, COUNT(*) AS freq
-          FROM (SELECT unnest(${Ora.toksSql}) AS w FROM documents)
+          FROM (SELECT unnest(${toksSql}) AS w FROM documents)
           WHERE LENGTH(w) <= $MaxLen GROUP BY 1),
         p1 AS (SELECT word, freq,
             unnest(generate_series(1, LENGTH(word))) AS s FROM wf),
@@ -961,13 +961,13 @@ object TextQueries {
       .orderBy(col("n")),
     Some((1 to 3).map { n =>
       s"""SELECT $n AS n,
-          (SELECT CAST(SUM(GREATEST(len(${Ora.toksSql}) - ${n - 1}, 0)) AS BIGINT)
+          (SELECT CAST(SUM(GREATEST(len(${toksSql}) - ${n - 1}, 0)) AS BIGINT)
            FROM documents) AS total_ngrams,
           (SELECT COUNT(*) FROM (SELECT DISTINCT sh
-             FROM (${Ora.shinglesSql(n)}))) AS distinct_ngrams,
+             FROM (${shinglesSql(n)}))) AS distinct_ngrams,
           ROUND(CAST((SELECT COUNT(*) FROM (SELECT DISTINCT sh
-              FROM (${Ora.shinglesSql(n)}))) AS DOUBLE) /
-            (SELECT SUM(GREATEST(len(${Ora.toksSql}) - ${n - 1}, 0))
+              FROM (${shinglesSql(n)}))) AS DOUBLE) /
+            (SELECT SUM(GREATEST(len(${toksSql}) - ${n - 1}, 0))
              FROM documents), 6) AS diversity"""
     }.mkString("\n      UNION ALL\n      ") + "\n      ORDER BY n"))
 
@@ -991,12 +991,12 @@ object TextQueries {
         .orderBy(col("doc_id"))
     },
     Some(s"""SELECT doc_id,
-        CAST(len(${Ora.toksSql}) AS BIGINT) AS n_tokens,
+        CAST(len(${toksSql}) AS BIGINT) AS n_tokens,
         CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
           AS n_syllables,
-        CASE WHEN len(${Ora.toksSql}) > 0
+        CASE WHEN len(${toksSql}) > 0
              THEN ROUND(CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-               AS DOUBLE) / len(${Ora.toksSql}), 6)
+               AS DOUBLE) / len(${toksSql}), 6)
              ELSE 0.0 END AS density
       FROM documents ORDER BY doc_id"""))
 
@@ -1032,7 +1032,7 @@ object TextQueries {
           maxLen = maxLen, minCount = minCount.toLong)
         .orderBy(col("word")),
       Some(s"""WITH wf AS MATERIALIZED (SELECT w AS word, COUNT(*) AS freq
-          FROM (SELECT unnest(${Ora.toksSql}) AS w FROM documents)
+          FROM (SELECT unnest(${toksSql}) AS w FROM documents)
           WHERE LENGTH(w) <= $maxLen GROUP BY 1),
         pc AS (SELECT word, freq,
             unnest(generate_series(1, LENGTH(word))) AS s FROM wf),
@@ -1062,7 +1062,7 @@ object TextQueries {
           t(s, dir, "documents"), "lang", "text", minCount = minCount, k = k)
         .orderBy(col("class"), col("rank")),
       Some(s"""WITH occ AS (SELECT lang AS class,
-          unnest(${Ora.toksSql}) AS token FROM documents),
+          unnest(${toksSql}) AS token FROM documents),
         a AS (SELECT class, token, CAST(COUNT(*) AS BIGINT) AS a
           FROM occ GROUP BY 1, 2),
         tt AS (SELECT token, CAST(SUM(a) AS BIGINT) AS tt FROM a
@@ -1093,7 +1093,7 @@ object TextQueries {
         t(s, dir, "documents"), "lang", "text")
       .orderBy(col("class")),
     Some(s"""WITH occ AS (SELECT lang AS class,
-        unnest(${Ora.toksSql}) AS token FROM documents),
+        unnest(${toksSql}) AS token FROM documents),
       a AS (SELECT class, token, CAST(COUNT(*) AS BIGINT) AS a
         FROM occ GROUP BY 1, 2),
       tt AS (SELECT token, CAST(SUM(a) AS BIGINT) AS tt FROM a GROUP BY 1),
@@ -1170,7 +1170,7 @@ object TextQueries {
           SELECT doc_id, unnest([{'tok_idx': CAST(j - 1 AS INT), 'w': t[j]}
                                  for j in generate_series(1, len(t))],
                                 recursive := true)
-          FROM (SELECT doc_id, ${Ora.toksSql} AS t FROM documents
+          FROM (SELECT doc_id, ${toksSql} AS t FROM documents
                 WHERE doc_id < 100)),
         sym AS (SELECT doc_id, tok_idx, w,
             array_to_string([w[j] for j in generate_series(1, len(w))], ' ')
@@ -1201,7 +1201,7 @@ object TextQueries {
       val basic = docs.agg(count(lit(1)).as("n_docs"),
         countDistinct(col("lang")).as("n_langs"),
         countDistinct(col("source")).as("n_sources"),
-        Ora.r6(Ora.dmean(col("n_chars").cast("double"))).as("mean_chars"))
+        r6(dmean(col("n_chars").cast("double"))).as("mean_chars"))
       val toks = docs.select(explode(graft.llm.TextAnalysis.tokens(col("text")))
           .as("tok"))
         .agg(count(lit(1)).as("n_tokens"),
@@ -1216,11 +1216,11 @@ object TextQueries {
     Some(s"""WITH basic AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
         CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
         CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
-        ROUND(${Ora.dmeanSql("CAST(n_chars AS DOUBLE)")}, 6)
+        ROUND(${dmeanSql("CAST(n_chars AS DOUBLE)")}, 6)
           AS mean_chars FROM documents),
       tk AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_tokens,
         CAST(COUNT(DISTINCT tok) AS BIGINT) AS vocab FROM
-        (SELECT unnest(${Ora.toksSql}) AS tok
+        (SELECT unnest(${toksSql}) AS tok
          FROM documents)),
       dp AS (SELECT CAST(SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS BIGINT)
         AS dup_docs FROM
@@ -1240,7 +1240,7 @@ object TextQueries {
           col("doc_id") % 10 =!= 0, d = d)
         .orderBy(col("doc_id")),
       Some(s"""WITH base AS (SELECT doc_id, (doc_id % 10 <> 0) AS is_train,
-          ${Ora.toksSql} AS toks FROM documents),
+          ${toksSql} AS toks FROM documents),
         bi AS (SELECT doc_id, is_train,
           unnest([{'w1': toks[i - 1], 'w2': toks[i]}
                   for i in generate_series(2, len(toks))],
@@ -1285,7 +1285,7 @@ object TextQueries {
   private def shSql(src: String): String =
     s"""SELECT DISTINCT doc_id, unnest([array_to_string(w[g : g + 1], ' ')
         for g in generate_series(1, len(w) - 1)]) AS sh
-        FROM (SELECT doc_id, ${Ora.toksSql} AS w FROM $src)"""
+        FROM (SELECT doc_id, ${toksSql} AS w FROM $src)"""
 
   /** DSIR importance weights: the non-English pool scored against the
     * English target distribution over 10k hashed bigram buckets —
@@ -1296,7 +1296,7 @@ object TextQueries {
   val dsirImportance: QueryDef = {
     val nBuckets = 10000
     val bSql = (shExpr: String) =>
-      s"${Ora.md5LongSql(s"'dsir:' || $shExpr")} % $nBuckets"
+      s"${md5LongSql(s"'dsir:' || $shExpr")} % $nBuckets"
     QueryDef(
       "curation_dsir",
       (s, dir) => {
@@ -1344,7 +1344,7 @@ object TextQueries {
     (s, dir) => graft.llm.TextAnalysis.zipfFit(
       t(s, dir, "documents"), "text", topN = 100),
     Some(s"""WITH freq AS (SELECT tok, COUNT(*) AS cnt
-          FROM (SELECT unnest(${Ora.toksSql}) AS tok FROM documents)
+          FROM (SELECT unnest(${toksSql}) AS tok FROM documents)
           GROUP BY 1),
         r AS (SELECT cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) AS rank
           FROM freq),
@@ -1401,7 +1401,7 @@ object TextQueries {
           s"SELECT $n AS n_top, c$n AS covered, total FROM m")
           .mkString("\n          UNION ALL ")
         s"""WITH freq AS (SELECT tok, COUNT(*) AS cnt
-            FROM (SELECT unnest(${Ora.toksSql}) AS tok FROM documents)
+            FROM (SELECT unnest(${toksSql}) AS tok FROM documents)
             GROUP BY 1),
           r AS (SELECT cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) AS rank
             FROM freq),
@@ -1449,11 +1449,11 @@ object TextQueries {
       },
       Some(s"""WITH base AS MATERIALIZED (SELECT doc_id,
           CAST(CAST(substr(source, 4) AS INT) < 5 AS DOUBLE) AS y,
-          CAST(len(${Ora.toksSql}) AS DOUBLE) / 100.0 AS x1,
+          CAST(len(${toksSql}) AS DOUBLE) / 100.0 AS x1,
           CAST(n_chars AS DOUBLE) / 1000.0 AS x2
           FROM documents),
         bet0 AS (SELECT 0.0 AS b0, 0.0 AS b1, 0.0 AS b2),
-        ${Ora.irlsStepsSql(iters)},
+        ${irlsStepsSql(iters)},
         fin AS (SELECT ROUND(b0, 6) AS b0, ROUND(b1, 6) AS b1,
           ROUND(b2, 6) AS b2 FROM bet$iters),
         sc AS (SELECT doc_id, y,

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{ColumnName, DataFrame, SparkSession}
   * Determinism discipline (double arithmetic is order-dependent, and Spark and
   * DuckDB will sum in different orders):
   *   - every SUM/AVG over doubles goes through an exact DECIMAL accumulator
-  *     (`Ora.dsum`) — decimal addition is associative, so both engines produce
+  *     (`graft.Ora.dsum`) — decimal addition is associative, so both engines produce
   *     the identical value regardless of partitioning;
   *   - scalar double math applied afterwards is the same IEEE ops on identical
   *     inputs on both sides;

@@ -37,6 +37,58 @@ object RT {
     writeAtomically(spark, marker)(_.write(batchId.toString
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
+  /** The at-least-once replay guard of every foreachBatch loop here: runs
+    * `apply(applied)` only when `batchId` is past the id recorded in
+    * `marker`, then records `batchId`. The marker is written last, so a
+    * crash inside `apply` replays the whole batch, and a replay of an
+    * applied batch is a no-op. Returns the previously applied id (−1 when
+    * none) when the batch ran.
+    */
+  private def applyOnce(spark: SparkSession, marker: String, batchId: Long)
+                       (apply: Long => Unit): Option[Long] = {
+    val path = new org.apache.hadoop.fs.Path(marker)
+    val applied = readAppliedMarker(
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
+    if (batchId <= applied) None
+    else {
+      apply(applied)
+      writeAppliedMarker(spark, path, batchId)
+      Some(applied)
+    }
+  }
+
+  /** The versioned state fold of [[aggMaintainBatch]], [[gramMaintainBatch]]
+    * and [[residualFoldBatch]]: `fold(batch, active)` gets the active
+    * `v<applied>` snapshot (None before the first batch), and its result is
+    * written to `v<batchId>` BEFORE the `_applied` marker flips to it; the
+    * superseded snapshot is pruned only after the flip.
+    */
+  private def versionedFold(statePath: String)
+                           (fold: (DataFrame, Option[DataFrame]) => DataFrame)
+                           : (DataFrame, Long) => Unit =
+    (batch: DataFrame, batchId: Long) => {
+      val spark = batch.sparkSession
+      applyOnce(spark, s"$statePath/_applied", batchId) { applied =>
+        val active =
+          if (applied < 0) None else Some(spark.read.parquet(s"$statePath/v$applied"))
+        fold(batch, active).write.mode("overwrite").parquet(s"$statePath/v$batchId")
+      }.filter(_ >= 0).foreach { applied =>
+        val old = new org.apache.hadoop.fs.Path(s"$statePath/v$applied")
+        old.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(old, true)
+      }
+    }
+
+  /** The active snapshot of a [[versionedFold]] state; `what` names the
+    * state in the error when none was written.
+    */
+  private def readVersioned(spark: SparkSession, statePath: String,
+                            what: String): DataFrame = {
+    val marker = new org.apache.hadoop.fs.Path(s"$statePath/_applied")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(marker), s"no maintained $what at $statePath")
+    spark.read.parquet(s"$statePath/v${readAppliedMarker(fs, marker)}")
+  }
+
   /** Replace `file` through the session's checkpoint manager: `write`
     * fills a temp file that is renamed over `file` only once it returns;
     * a throw cancels the temp file and leaves `file` as it was.
@@ -329,11 +381,7 @@ object RT {
                       : (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val markerPath = new org.apache.hadoop.fs.Path(
-        s"$indexPath/_ingest_batch")
-      val fs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val applied = readAppliedMarker(fs, markerPath)
-      if (batchId > applied) {
+      applyOnce(spark, s"$indexPath/_ingest_batch", batchId) { _ =>
         val b = batch.localCheckpoint() // consumed by probe + kept below;
                                         // a streaming source frame may not
                                         // be recomputable across actions
@@ -349,7 +397,6 @@ object RT {
           Seq(idCol), "left_anti")
         graft.llm.DedupIndex.append(spark, indexPath, keptFresh, idCol,
           textCol)
-        writeAppliedMarker(spark, markerPath, batchId)
       }
     }
 
@@ -385,10 +432,7 @@ object RT {
                     growIndex: Boolean): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val markerPath = new org.apache.hadoop.fs.Path(s"$indexPath/_serve_batch")
-      val fs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val applied = readAppliedMarker(fs, markerPath)
-      if (batchId > applied) {
+      applyOnce(spark, s"$indexPath/_serve_batch", batchId) { _ =>
         val b = batch.localCheckpoint() // streaming source frames may not
                                         // be recomputable across actions
         val exclude = if (growIndex) Some(b.select(col(idCol))) else None
@@ -402,7 +446,6 @@ object RT {
           graft.llm.Similarity.appendToIndex(spark, indexPath,
             freshAgainstIvf(spark, indexPath, kv, idCol), idCol, vecCol, dim)
         }
-        writeAppliedMarker(spark, markerPath, batchId)
       }
     }
 
@@ -436,10 +479,7 @@ object RT {
                          growIndex: Boolean): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val markerPath = new org.apache.hadoop.fs.Path(s"$indexPath/_serve_batch")
-      val fs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val applied = readAppliedMarker(fs, markerPath)
-      if (batchId > applied) {
+      applyOnce(spark, s"$indexPath/_serve_batch", batchId) { _ =>
         val b = batch.localCheckpoint() // streaming source frames may not
                                         // be recomputable across actions
         val meta = graft.llm.GraphAnnIndex.readMeta(spark, indexPath)
@@ -470,7 +510,6 @@ object RT {
           graft.llm.GraphAnnIndex.append(spark, indexPath, fresh, idCol,
             vecCol)
         }
-        writeAppliedMarker(spark, markerPath, batchId)
       }
     }
 
@@ -526,11 +565,7 @@ object RT {
                      minTokens: Int = 10): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val markerPath = new org.apache.hadoop.fs.Path(
-        s"$dedupIndexPath/_pipeline_batch")
-      val fs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val applied = readAppliedMarker(fs, markerPath)
-      if (batchId > applied) {
+      applyOnce(spark, s"$dedupIndexPath/_pipeline_batch", batchId) { _ =>
         val b = batch.localCheckpoint() // streaming source frames may not
                                         // be recomputable across actions
         def audit(df: DataFrame, outPath: String): Unit =
@@ -563,7 +598,6 @@ object RT {
         graft.llm.Similarity.appendToIndex(spark, annIndexPath,
           freshAgainstIvf(spark, annIndexPath, kv, idCol), idCol, vecCol,
           dim)
-        writeAppliedMarker(spark, markerPath, batchId)
       }
     }
 
@@ -657,26 +691,12 @@ object RT {
     */
   def aggMaintainBatch(statePath: String, keys: Seq[String], valCol: String,
                        opCol: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
-      val fs = new org.apache.hadoop.fs.Path(statePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(s"$statePath/_applied")
-      val applied = readAppliedMarker(fs, marker)
-      if (batchId > applied) {
-        val old =
-          if (applied < 0)
-            // empty state with the right schema: an aggregate of zero rows
-            graft.operators.Relational.buildAggState(
-              batch.filter(lit(false)), keys, valCol)
-          else spark.read.parquet(s"$statePath/v$applied")
-        graft.operators.Relational
-          .maintainAgg(old, batch, keys, valCol, opCol)
-          .write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        writeAppliedMarker(spark, marker, batchId)
-        if (applied >= 0)
-          fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/v$applied"), true)
-      }
+    versionedFold(statePath) { (batch, active) =>
+      // before the first batch: empty state with the right schema, an
+      // aggregate of zero rows
+      val old = active.getOrElse(graft.operators.Relational.buildAggState(
+        batch.filter(lit(false)), keys, valCol))
+      graft.operators.Relational.maintainAgg(old, batch, keys, valCol, opCol)
     }
 
   /** Streaming PCA-model maintenance: the Gram matrix is an additive
@@ -696,52 +716,33 @@ object RT {
     */
   def gramMaintainBatch(statePath: String, vecCol: String, dim: Int)
       : (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
-      val fs = new org.apache.hadoop.fs.Path(statePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(s"$statePath/_applied")
-      val applied = readAppliedMarker(fs, marker)
-      if (batchId > applied) {
-        val deltaRows = batch
-          .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-          .select(posexplode(col(vecCol)).as(Seq("pi", "xi")),
-            col(vecCol).as("__v"))
-          .select((col("pi") + 1).as("i"), col("xi").cast("double").as("xi"),
-            posexplode(col("__v")).as(Seq("pj", "xj")))
-          .select(col("i"), (col("pj") + 1).as("j"),
-            (col("xi") * col("xj").cast("double")).as("p"))
-          .groupBy(col("i"), col("j"))
-          .agg(sum(floor(col("p") * lit(graft.ml.Pca.gramQ)).cast("long"))
-            .as("gsum"))
-        val merged =
-          if (applied < 0) deltaRows
-          else spark.read.parquet(s"$statePath/v$applied")
-            .unionByName(deltaRows)
-            .groupBy(col("i"), col("j"))
-            .agg(sum(col("gsum")).as("gsum"))
-        merged.write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        writeAppliedMarker(spark, marker, batchId)
-        if (applied >= 0)
-          fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/v$applied"), true)
-      }
+    versionedFold(statePath) { (batch, active) =>
+      val deltaRows = batch
+        .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
+        .select(posexplode(col(vecCol)).as(Seq("pi", "xi")),
+          col(vecCol).as("__v"))
+        .select((col("pi") + 1).as("i"), col("xi").cast("double").as("xi"),
+          posexplode(col("__v")).as(Seq("pj", "xj")))
+        .select(col("i"), (col("pj") + 1).as("j"),
+          (col("xi") * col("xj").cast("double")).as("p"))
+        .groupBy(col("i"), col("j"))
+        .agg(sum(floor(col("p") * lit(graft.ml.Pca.gramQ)).cast("long"))
+          .as("gsum"))
+      active.fold(deltaRows)(_.unionByName(deltaRows)
+        .groupBy(col("i"), col("j"))
+        .agg(sum(col("gsum")).as("gsum")))
     }
 
   /** The maintained Gram written by [[gramMaintainBatch]], as the
     * (i, j, g double) relation [[graft.ml.Pca.powerIteration]] consumes.
     */
-  def readGramState(spark: SparkSession, statePath: String): DataFrame = {
-    val marker = new org.apache.hadoop.fs.Path(s"$statePath/_applied")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(marker), s"no maintained Gram at $statePath")
-    val applied = readAppliedMarker(fs, marker)
+  def readGramState(spark: SparkSession, statePath: String): DataFrame =
     // divide down exactly as Pca.gram's emission (int64→double is
     // correctly rounded; the state keeps the raw integers so the FOLD
     // stays exact — only the read narrows)
-    spark.read.parquet(s"$statePath/v$applied")
+    readVersioned(spark, statePath, "Gram")
       .select(col("i"), col("j"),
         (col("gsum").cast("double") / lit(graft.ml.Pca.gramQ)).as("g"))
-  }
 
   /** Streaming conformal monitoring, calibration side: fold each
     * micro-batch of per-group absolute residuals into a maintained
@@ -758,32 +759,18 @@ object RT {
     */
   def residualFoldBatch(statePath: String, groupCol: String,
                         residCol: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
-      val fs = new org.apache.hadoop.fs.Path(statePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(s"$statePath/_applied")
-      val applied = readAppliedMarker(fs, marker)
-      if (batchId > applied) {
-        val delta = batch
-          .filter(col(residCol).isNotNull &&
-            !isnan(col(residCol).cast("double")))
-          .select(col(groupCol).as("g"),
-            floor(abs(col(residCol).cast("double")) * lit(residQ))
-              .cast("long").as("rb"))
-          .groupBy(col("g"), col("rb"))
-          .agg(count(lit(1)).as("cnt"))
-        val merged =
-          if (applied < 0) delta
-          else spark.read.parquet(s"$statePath/v$applied")
-            .unionByName(delta)
-            .groupBy(col("g"), col("rb"))
-            .agg(sum(col("cnt")).as("cnt"))
-        merged.write.mode("overwrite").parquet(s"$statePath/v$batchId")
-        writeAppliedMarker(spark, marker, batchId)
-        if (applied >= 0)
-          fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/v$applied"), true)
-      }
+    versionedFold(statePath) { (batch, active) =>
+      val delta = batch
+        .filter(col(residCol).isNotNull &&
+          !isnan(col(residCol).cast("double")))
+        .select(col(groupCol).as("g"),
+          floor(abs(col(residCol).cast("double")) * lit(residQ))
+            .cast("long").as("rb"))
+        .groupBy(col("g"), col("rb"))
+        .agg(count(lit(1)).as("cnt"))
+      active.fold(delta)(_.unionByName(delta)
+        .groupBy(col("g"), col("rb"))
+        .agg(sum(col("cnt")).as("cnt")))
     }
 
   /** Residual fixed-point quantum (1e-6) shared by the fold, the
@@ -803,11 +790,7 @@ object RT {
   def maintainedQuantile(spark: SparkSession, statePath: String,
                          alpha: Double): DataFrame = {
     require(alpha > 0 && alpha < 1, s"maintainedQuantile: bad alpha=$alpha")
-    val marker = new org.apache.hadoop.fs.Path(s"$statePath/_applied")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(marker), s"no maintained residual state at $statePath")
-    val applied = readAppliedMarker(fs, marker)
-    val st = spark.read.parquet(s"$statePath/v$applied")
+    val st = readVersioned(spark, statePath, "residual state")
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
     val wCum = wAll.orderBy(col("rb"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -837,10 +820,7 @@ object RT {
                           outPath: String): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val markerPath = new org.apache.hadoop.fs.Path(s"$outPath/_serve_batch")
-      val fs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val applied = readAppliedMarker(fs, markerPath)
-      if (batchId > applied) {
+      applyOnce(spark, s"$outPath/_serve_batch", batchId) { _ =>
         val q = maintainedQuantile(spark, statePath, alpha)
           .select(col("g").as(groupCol), col("q_hat"), col("q_bucket"))
         batch.localCheckpoint()
@@ -850,18 +830,12 @@ object RT {
               col("q_bucket"))
           .drop("q_bucket")
           .write.mode("append").parquet(outPath)
-        writeAppliedMarker(spark, markerPath, batchId)
       }
     }
 
   /** The active maintained state written by [[aggMaintainBatch]]. */
-  def readAggState(spark: SparkSession, statePath: String): DataFrame = {
-    val marker = new org.apache.hadoop.fs.Path(s"$statePath/_applied")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(marker), s"no maintained state at $statePath")
-    val applied = readAppliedMarker(fs, marker)
-    spark.read.parquet(s"$statePath/v$applied")
-  }
+  def readAggState(spark: SparkSession, statePath: String): DataFrame =
+    readVersioned(spark, statePath, "state")
 
   // ---- streaming funnel ----------------------------------------------------
 

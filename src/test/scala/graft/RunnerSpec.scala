@@ -95,4 +95,10 @@ class RunnerSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(groups.asScala.toSet == Set("b8_rfm_segments"), groups)
     assert(sc.getLocalProperty("spark.jobGroup.id") == null)
   }
+
+  test("select keeps an explicit filter's order; a blank filter selects all in name order") {
+    val picked = Runner.select("q1_pricing_summary, b8_rfm_segments,a4_aggregate_multi,b8_rfm_segments")
+    assert(picked.map(_._1) == Seq("q1_pricing_summary", "b8_rfm_segments", "a4_aggregate_multi"))
+    assert(Runner.select(" ").map(_._1) == SparkEntry.queries.keys.toSeq.sorted)
+  }
 }

@@ -17,6 +17,7 @@ object TestSession {
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.ui.enabled", "false")
     .config(Core.CheckpointManagerConf._1, Core.CheckpointManagerConf._2)
+    .config(Core.ExtensionsConf._1, Core.ExtensionsConf._2)
     .getOrCreate()
 }
 
